@@ -43,19 +43,6 @@ ENTRY_CONFIG = EngineConfig(
     stopstem=False, stopwords_only=True, skip_threshold=64,
     shuffle_partitions=16, positions=True,
 )
-# same semantics, posting blocks stored VByte+Unary compressed — puts the
-# codec + _decode_blocks query path (C1/C2/S6) under the same SQL oracles
-ENTRY_CONFIG_C = EngineConfig(
-    stopstem=False, stopwords_only=True, skip_threshold=64,
-    shuffle_partitions=16, compression=True,
-)
-# gap-encoded docIDs on top of the compressed layout (the reference's
-# Posting.java:7 TODO, round 4) — same oracle SQL again: the delta layer
-# must be invisible to results
-ENTRY_CONFIG_CD = EngineConfig(
-    stopstem=False, stopwords_only=True, skip_threshold=64,
-    shuffle_partitions=16, compression=True, delta_docids=True,
-)
 
 Q_DISJ = "spark table join fast"
 Q_PHRASE = "merge column"
@@ -99,53 +86,15 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _CORPUS_CACHE[key]
 
 
-def _engine(
-    spark: SparkSession, sf_dir: str, compressed: bool = False,
-    delta: bool = False,
-) -> SearchEngine:
-    key = (os.path.abspath(sf_dir), compressed, delta)
+def _engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
+    key = os.path.abspath(sf_dir)
     if key not in _ENGINE_CACHE:
-        suffix = "_cd" if delta else ("_c" if compressed else "")
-        idx = (
-            "/tmp/se_entry_index/"
-            + hashlib.md5(key[0].encode()).hexdigest()[:12]
-            + suffix
-        )
-        if compressed:
-            # the compressed index differs from the raw one ONLY in the
-            # postings stage (VByte/Unary blocks): seed its build dir with
-            # the raw index's doctable/tf/stats/lexicon checkpoints and let
-            # the resumable builder rebuild just the postings — exactly the
-            # per-stage resume path the north_rule asks for, exercised here
-            # across a config change.
-            raw = _engine(spark, sf_dir, compressed=False).index_dir
-            if not os.path.exists(os.path.join(idx, "manifest.json")):
-                import json as _json
-                import shutil as _shutil
-
-                os.makedirs(idx, exist_ok=True)
-                for stage in ("doctable", "tf", "lexicon"):
-                    _shutil.copytree(
-                        os.path.join(raw, stage),
-                        os.path.join(idx, stage),
-                        dirs_exist_ok=True,
-                    )
-                _shutil.copy(
-                    os.path.join(raw, "stats.json"),
-                    os.path.join(idx, "stats.json"),
-                )
-                with open(os.path.join(raw, "manifest.json")) as f:
-                    man = _json.load(f)
-                man["stages"].pop("postings", None)
-                with open(os.path.join(idx, "manifest.json"), "w") as f:
-                    _json.dump(man, f)
+        idx = "/tmp/se_entry_index/" + hashlib.md5(key.encode()).hexdigest()[:12]
         build_index(
             spark,
             load_documents_as_corpus(spark, sf_dir),
             idx,
-            ENTRY_CONFIG_CD
-            if delta
-            else (ENTRY_CONFIG_C if compressed else ENTRY_CONFIG),
+            ENTRY_CONFIG,
             resume=True,
         )
         _ENGINE_CACHE[key] = SearchEngine(spark, idx)
@@ -501,18 +450,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("phrase_tf").cast("long").alias("phrase_tf"),
         )
 
-    def bm25_topk_compressed(spark, sf):
-        # VByte/Unary-compressed index, same oracle SQL as the raw path:
-        # results must be identical (C1/C2/S6 + _decode_blocks under oracle)
-        return _topk_df(_engine(spark, sf, compressed=True), Q_DISJ, k=10)
-
-    def bm25_topk_compressed_delta(spark, sf):
-        # gap-encoded docIDs (delta_docids=True) under the same oracle:
-        # the delta layer must be invisible to results
-        return _topk_df(
-            _engine(spark, sf, compressed=True, delta=True), Q_DISJ, k=10
-        )
-
     def batch_efficiency_shape(spark, sf):
         # S10 "e" mode (TestPerformance.java:58-104) under the oracle:
         # the report's latencies are non-deterministic, so the pinned
@@ -766,8 +703,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_cosine_topk_streamed": embedding_cosine_topk_streamed,
         "embedding_cosine_topk_ivf": embedding_cosine_topk_ivf,
         "ann_ivf_recall": ann_ivf_recall,
-        "bm25_topk_compressed": bm25_topk_compressed,
-        "bm25_topk_compressed_delta": bm25_topk_compressed_delta,
         "bm25_topk_local_exec": bm25_topk_local_exec,
         "bm25_topk_local_maxscore": bm25_topk_local_maxscore,
         "bm25_topk_sharded": bm25_topk_sharded,
@@ -1176,12 +1111,6 @@ WITH {_BASE_CTES}
 SELECT doc_id, sha256({_CLEAN}) AS fingerprint
 FROM base
 """
-
-    # identical SQL as the raw-index disjunctive query: the compressed
-    # index must produce the same results bit-for-bit
-    sql["bm25_topk_compressed"] = _topk_sql(Q_DISJ)
-    # and again for the delta-docID layout (round 4)
-    sql["bm25_topk_compressed_delta"] = _topk_sql(Q_DISJ)
 
     # exact phrase: positions are indices into the post-pipeline token
     # sequence; an occurrence at base b has term_i at b+i; BM25 treats

@@ -171,48 +171,6 @@ def main() -> None:
         lat_ms.append(time.time() - t0)
     timings["query_maxscore_p50"] = round(statistics.median(lat_ms), 3)
 
-    # --- compressed-postings query path (VByte/Unary blocks) ---
-    # same corpus, compression on; p50 over the same query set gives the
-    # raw-vs-compressed read amplification directly
-    idx_c = idx_dir + "_comp"
-    cfg_c = EngineConfig(stopstem=True, skip_threshold=64,
-                         shuffle_partitions=CPUS, compression=True)
-    shutil.rmtree(idx_c, ignore_errors=True)
-    t0 = time.time()
-    build_index(spark, corpus, idx_c, cfg_c, resume=False)
-    timings["index_build_compressed"] = round(time.time() - t0, 3)
-    comp_engine = SearchEngine(spark, idx_c)
-
-    # delta-docids layout (gap-encoded VByte, EngineConfig.delta_docids):
-    # built back-to-back with the raw-id compressed build above, queried
-    # INTERLEAVED with it below, so the pair shares one box window
-    # (VERDICT r4 #7 — the layout halves the dominant column; this is
-    # its query-time cost/benefit evidence)
-    idx_cd = idx_dir + "_compd"
-    cfg_cd = EngineConfig(stopstem=True, skip_threshold=64,
-                          shuffle_partitions=CPUS, compression=True,
-                          delta_docids=True)
-    shutil.rmtree(idx_cd, ignore_errors=True)
-    t0 = time.time()
-    build_index(spark, corpus, idx_cd, cfg_cd, resume=False)
-    timings["index_build_compressed_delta"] = round(time.time() - t0, 3)
-    compd_engine = SearchEngine(spark, idx_cd)
-
-    comp_engine.search(queries[0], k=10).collect()  # warm plan/footers
-    compd_engine.search(queries[0], k=10).collect()
-    lat_c, lat_cd = [], []
-    for q in queries:
-        t0 = time.time()
-        comp_engine.search(q, k=10).collect()
-        lat_c.append(time.time() - t0)
-        t0 = time.time()
-        compd_engine.search(q, k=10).collect()
-        lat_cd.append(time.time() - t0)
-    timings["query_bm25_compressed"] = round(statistics.median(lat_c), 3)
-    timings["query_bm25_compressed_delta"] = round(
-        statistics.median(lat_cd), 3
-    )
-
     # --- Zipfian 100k-doc corpus: the selectivity-skewed regime ---
     # The sf documents table has a 24-term near-uniform vocabulary: every
     # query term is stopword-scale, so MaxScore has nothing to prune and
@@ -373,41 +331,20 @@ def main() -> None:
     timings["index_build_positions"] = round(time.time() - t0, 3)
     pos_engine = SearchEngine(spark, idx_pos)
 
-    # compressed positional layout (delta+VByte per-(term,doc) arrays,
-    # EngineConfig.compress_positions — round 5): built back-to-back and
-    # queried interleaved with the raw layout; positions dir sizes
-    # recorded for the BASELINE.md datapoint
-    idx_posc = idx_dir + "_posc"
-    shutil.rmtree(idx_posc, ignore_errors=True)
-    cfg_posc = EngineConfig(stopstem=True, skip_threshold=64,
-                            shuffle_partitions=CPUS, positions=True,
-                            compress_positions=True)
-    t0 = time.time()
-    build_index(spark, corpus, idx_posc, cfg_posc, resume=False)
-    timings["index_build_positions_compressed"] = round(time.time() - t0, 3)
-    posc_engine = SearchEngine(spark, idx_posc)
-
     def _dir_bytes(d):
         return sum(
             os.path.getsize(os.path.join(r, f))
             for r, _dd, fs in os.walk(d) for f in fs
         )
 
-    positions_bytes_raw = _dir_bytes(os.path.join(idx_pos, "positions"))
-    positions_bytes_compressed = _dir_bytes(
-        os.path.join(idx_posc, "positions")
-    )
+    positions_bytes = _dir_bytes(os.path.join(idx_pos, "positions"))
 
     # warm the positions footers/plan first, like every other query
     # section (the first call after a fresh build pays worker-pool and
     # file-listing costs that are not the phrase path's)
     pos_engine.phrase_search("merge column", k=10).collect()
-    posc_engine.phrase_search("merge column", k=10).collect()
     timed("query_phrase",
           lambda: pos_engine.phrase_search(
-              "merge column", k=10, local=False).collect())
-    timed("query_phrase_compressed",
-          lambda: posc_engine.phrase_search(
               "merge column", k=10, local=False).collect())
     # driver-local phrase fast path (round 5): p50 over 5 calls — a
     # single timing at ~ms scale is noise
@@ -503,8 +440,7 @@ def main() -> None:
         "build_docs_per_sec_100k": round(n_big / big_sec, 1),
         "build_docs_per_sec_zipf100k": round(100_000 / z_sec, 1),
         "build_tokens_per_sec_zipf100k": round(n_tokens / z_sec, 1),
-        "positions_bytes_raw": positions_bytes_raw,
-        "positions_bytes_compressed": positions_bytes_compressed,
+        "positions_bytes": positions_bytes,
         "cpus": CPUS,
     }))
     spark.stop()

@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Capture physical-plan dumps for PLANS.md (round-3 paths).
 
-Builds two tiny indexes (raw + compressed, positions on) at sf0.001 and
-prints the executedPlan for:
+Builds one tiny index (positions on) at sf0.001 and prints the
+executedPlan for:
 
-  1. compressed DAAT — must show NO doctable join (doc_lens ride in the
-     posting block rows) and the block-decode mapInPandas bounded by the
-     pruned scan;
+  1. DAAT — must show NO doctable join (doc_lens ride in the posting
+     block rows, exploded straight from the pruned scan);
   2. phrase query — must show NO single-partition Window exchange (the
      phrase-df count is a 1-row agg broadcast back onto the matches);
   3. MaxScore with driver-side literal candidates — the InSet/exists()
@@ -58,27 +57,23 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     corpus = load_documents_as_corpus(spark, "/root/testdata/sf0.001")
 
-    idx_raw = "/tmp/se_plans_raw"
-    idx_comp = "/tmp/se_plans_comp"
-    for d, comp in ((idx_raw, False), (idx_comp, True)):
-        if not os.path.exists(os.path.join(d, "stats.json")):
-            shutil.rmtree(d, ignore_errors=True)
-            build_index(
-                spark,
-                corpus,
-                d,
-                EngineConfig(
-                    stopstem=True,
-                    skip_threshold=64,
-                    shuffle_partitions=8,
-                    compression=comp,
-                    positions=not comp,
-                ),
-                resume=False,
-            )
+    idx = "/tmp/se_plans_raw"
+    if not os.path.exists(os.path.join(idx, "stats.json")):
+        shutil.rmtree(idx, ignore_errors=True)
+        build_index(
+            spark,
+            corpus,
+            idx,
+            EngineConfig(
+                stopstem=True,
+                skip_threshold=64,
+                shuffle_partitions=8,
+                positions=True,
+            ),
+            resume=False,
+        )
 
-    raw = SearchEngine(spark, idx_raw)
-    comp = SearchEngine(spark, idx_comp)
+    raw = SearchEngine(spark, idx)
 
     def dump(title, note, df):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -87,14 +82,13 @@ def main() -> None:
 
     q = "spark table join fast"
     p1 = dump(
-        "Compressed DAAT (VByte/Unary blocks) — no doctable join",
-        "doc_lens ride inside the compressed posting rows, so the decode "
-        "mapInPandas emits (term, doc_id, tf, doc_len) directly and BM25 "
-        "is computed without ANY join; the scan is partition-pruned and "
-        "term-pushed like the raw path.",
-        comp.search(q, k=10, local=False),
+        "DAAT — no doctable join",
+        "doc_lens ride inside the posting block rows, so the explode "
+        "emits (term, doc_id, tf, doc_len) directly and BM25 is computed "
+        "without ANY join; the scan is partition-pruned and term-pushed.",
+        raw.search(q, k=10, local=False),
     )
-    assert "doctable" not in p1, "compressed path joined the doctable!"
+    assert "doctable" not in p1, "DAAT path joined the doctable!"
 
     p2 = dump(
         "Exact-phrase query — one positions scan, single-aggregate "
@@ -107,7 +101,7 @@ def main() -> None:
         "once; coverage is the one-hot bit_or single aggregate, not a "
         "count(distinct) double aggregate; no Window.partitionBy() "
         "funneling every match through one task.",
-        raw.phrase_search("merge column", k=10),
+        raw.phrase_search("merge column", k=10, local=False),
     )
     # the only Window allowed is the rank projection ABOVE the top-k
     # (it sees <= k rows); nothing below TakeOrderedAndProject — i.e. on

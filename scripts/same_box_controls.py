@@ -183,12 +183,12 @@ def main() -> None:
                       f"{[round(x, 4) for x in res['times']]}",
                       file=sys.stderr)
         if checks[lo] != checks[ln]:
-            # old and new code may legitimately answer through different
-            # plans (e.g. the r5 driver-local fast path changes nothing
-            # in results — then this is a hard failure — but a missing
-            # fixture or changed default is surfaced rather than hidden)
-            print(f"WARNING {what}: result check differs {checks}",
-                  file=sys.stderr)
+            # a timing comparison between two versions means nothing if
+            # they answered differently: fail hard and show both answers
+            sys.exit(
+                f"{what}: result check differs between versions\n"
+                f"  {lo}: {checks[lo]}\n  {ln}: {checks[ln]}"
+            )
         table[what] = {
             f"{lo}_best": round(min(per[lo]), 4),
             f"{lo}_median": round(statistics.median(per[lo]), 4),

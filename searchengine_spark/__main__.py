@@ -39,8 +39,6 @@ def cmd_build(args) -> None:
     spark = _spark(args.cpus)
     cfg = EngineConfig(
         stopstem=not args.no_sws,
-        compression=args.compression or args.delta_docids,
-        delta_docids=args.delta_docids,
         skip_threshold=args.skip_threshold,
         positions=args.positions,
     )
@@ -288,11 +286,6 @@ def main(argv=None) -> None:
     b.add_argument("--input", required=True)
     b.add_argument("--index", required=True)
     b.add_argument("--no-sws", action="store_true", help="disable stopword+stem")
-    b.add_argument("--compression", action="store_true")
-    b.add_argument("--delta-docids", action="store_true",
-                   help="gap-encode docIDs before VByte (implies "
-                   "--compression; raw absolute-id layout is the "
-                   "reference-parity default)")
     b.add_argument("--skip-threshold", type=int, default=1024)
     b.add_argument("--positions", action="store_true",
                    help="also build the positional index (phrase queries)")

@@ -5,7 +5,9 @@ Flags.java:31-79) plus the hard-coded constants of utils/Constants.java.
 The reference persists two booleans (stopword/stem, compression) in a binary
 ``flags`` file; we persist the whole config as JSON next to the index so a
 query session reconstructs the exact build semantics (Query.java:54 re-reads
-flags before answering queries).
+flags before answering queries). Compression is not a flag here: the index
+has one on-disk layout, native int lists in zstd Parquet
+(index/builder.py ``write_table``).
 """
 
 from __future__ import annotations
@@ -21,18 +23,6 @@ class EngineConfig:
     # stopword removal + Porter stemming, one switch like the reference's
     # "sws" flag (TextProcessor.java:30-33 applies both under it)
     stopstem: bool = True
-    # VByte(docIds) + Unary(tfs) posting compression (Flags.java:17)
-    compression: bool = False
-
-    # Gap-encode docIDs before VByte (requires compression=True). The
-    # reference stores ABSOLUTE ids and notes delta encoding as a TODO
-    # it never implemented (Posting.java:7; VariableBytes.java:15-46
-    # encodes raw ids), so raw layout stays the parity default. Blocks
-    # are doc_id-sorted (IndexMerger order preserved by the build), so
-    # per-block gaps are >= 1 and shrink the dominant index column: at
-    # 10^12-doc scale an absolute id costs ~6 VByte bytes while a gap
-    # in a dense list costs 1-2. Query results are identical.
-    delta_docids: bool = False
 
     # Orthogonal split of the reference's single sws flag: the DuckDB
     # correctness oracles can replicate stopword removal in SQL but not
@@ -68,14 +58,6 @@ class EngineConfig:
     # default because it roughly doubles index size.
     positions: bool = False
 
-    # store each (term, doc_id) positions array delta+VByte-compressed
-    # (functions/codecs.py vbyte_encode_delta over positions+1 — sorted
-    # 0-based positions are strictly increasing, so gaps are >= 1).
-    # Positions are the largest index surface when enabled; gaps in a
-    # dense occurrence list cost 1 byte each vs parquet's 4-byte ints.
-    # Query results are identical (phrase_search decodes in-flight).
-    compress_positions: bool = False
-
     # number of term hash-buckets the postings/lexicon tables are
     # partitioned by (query-time partition pruning on pmod(crc32(term)) —
     # crc32 so external engines/oracles can reproduce the bucketing)
@@ -100,4 +82,13 @@ class EngineConfig:
         with open(os.path.join(index_dir, "flags.json")) as f:
             raw = json.load(f)
         names = {f.name for f in fields(cls)}
+        # a switch this engine does not have, turned on, marks an index
+        # it cannot read — e.g. the retired VByte/Unary, delta-VByte and
+        # compressed-positions layouts. Fail here, not deep in a read.
+        for k, v in raw.items():
+            if k not in names and v is True:
+                raise ValueError(
+                    f"{index_dir}: flags.json sets {k}=true, an index "
+                    "layout this engine no longer reads; rebuild the index"
+                )
         return cls(**{k: v for k, v in raw.items() if k in names})

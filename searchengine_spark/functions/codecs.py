@@ -18,9 +18,9 @@ loops) suitable for Arrow-batched pandas UDFs over BinaryType columns.
   keep it for byte-level index parity. The decoder takes the posting
   count, as the reference's does (Unary.java:61).
 
-On top of these, Parquet's own page encodings (RLE/dictionary/ZSTD) apply
-to the BinaryType columns for free; the VByte/Unary layer exists for
-reference-format parity and for the compression=True engine config.
+These are reference-format parity operators (SURVEY C1/C2, FIXTURES §6).
+The index itself does not use them: postings are stored as native int
+lists in zstd-compressed Parquet (index/builder.py ``write_table``).
 """
 
 from __future__ import annotations
@@ -64,29 +64,6 @@ def vbyte_decode(buf: bytes) -> np.ndarray:
     vals = np.zeros(ends.size, dtype=np.uint64)
     np.add.at(vals, value_id, (b & np.uint8(0x7F)).astype(np.uint64) << (7 * pos))
     return vals.astype(np.int64)
-
-
-def vbyte_encode_delta(values) -> bytes:
-    """Gap-encode a strictly increasing 1-D array of ints >= 1, then
-    VByte the gaps (first value absolute). Every gap is >= 1 because
-    block doc_ids are sorted and distinct, so the VByte >=1 domain
-    holds. This is the delta layout the reference left as a TODO
-    (Posting.java:7); byte format of each group is IDENTICAL to
-    :func:`vbyte_encode` — only the values differ."""
-    v = np.asarray(values, dtype=np.int64)
-    if v.size == 0:
-        return b""
-    gaps = np.diff(v)
-    if v[0] < 1 or (gaps < 1).any():
-        raise ValueError(
-            "vbyte_encode_delta requires strictly increasing values >= 1"
-        )
-    return vbyte_encode(np.concatenate(([v[0]], gaps)))
-
-
-def vbyte_decode_delta(buf: bytes) -> np.ndarray:
-    """Decode gap-encoded VByte bytes back to absolute int64 values."""
-    return np.cumsum(vbyte_decode(buf))
 
 
 def unary_encode(tfs) -> bytes:

@@ -24,13 +24,21 @@ Output layout under ``index_dir``:
   lexicon/         (term, term_bucket, df, cf, idf, max_bm25, max_tfidf,
                     n_blocks)
   postings/        partitioned by term_bucket; one row per (term, block):
-                   (term, block_id, n_postings, max_doc_id,
-                    doc_ids, tfs, doc_lens | doc_ids_vb, tfs_unary,
-                    block_max_bm25, block_max_tfidf)
+                   (term, block_id, n_postings, min_doc_id, max_doc_id,
+                    doc_ids, tfs, doc_lens, block_max_bm25,
+                    block_max_tfidf)
+  positions/       optional, partitioned by term_bucket:
+                   (term, doc_id, positions, doc_len)
+  block_summary/   partitioned by term_bucket: (term, top_post_bm25,
+                   top_post_tfidf)
   manifest.json    per-stage lineage: rows, files, per-file row counts,
                    duration, docs/sec — the north_rule's resumable-build
                    checkpoint record. A stage whose directory has _SUCCESS
                    and a manifest entry is skipped on re-run (resume).
+
+Every table has ONE on-disk format (see :func:`write_table`): Parquet with
+zstd column chunks, posting and position arrays as native int lists.
+Compression is a property of that format, not a config flag.
 
 Skew handling at 1e12-file scale:
 
@@ -57,14 +65,10 @@ import time
 from contextlib import contextmanager
 from typing import Optional
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import EngineConfig
-from ..functions import codecs
 from ..functions.scoring import bm25_partial_expr, idf_expr, tfidf_partial_expr
 from ..functions.text import stem_udf, tokenize_raw
 from ..sources.corpus import assign_doc_ids, filter_malformed, with_sha256
@@ -111,6 +115,26 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % n_buckets
+
+
+# the index's one Parquet codec. Whole-index bytes per input byte on
+# perfbench's 20k-doc Zipf corpus (4 vCPU VM, 8 shuffle partitions):
+# zstd 2.54, Spark's default snappy 3.16, and the retired VByte/Unary
+# (2.91) and delta-VByte (2.69) blob layouts; interactive query p50 over
+# ten perfbench seeds was unchanged (31.3 vs 30.9 ms with snappy). The
+# int lists stay readable by any Parquet/Arrow consumer.
+INDEX_CODEC = "zstd"
+
+
+def write_table(df: DataFrame, path: str, partition_by: Optional[str] = None) -> None:
+    """Write one index table (overwrite) in the index's single on-disk
+    format. Every index-table write — the build stages, the streaming
+    segments and compaction — goes through here, so this is the only
+    place that knows the format."""
+    w = df.write.mode("overwrite").option("compression", INDEX_CODEC)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
 
 
 class IndexBuilder:
@@ -285,7 +309,7 @@ class IndexBuilder:
                 # empty-after-preprocessing docs are still doctable rows in
                 # the reference (stored before tokens are inspected,
                 # PartialIndexBuilder.java:63-64) — kept, doc_len = 0
-                (
+                write_table(
                     tokenized.select(
                         "doc_id",
                         F.concat_ws("/", "repo", "path").alias("docno"),
@@ -295,9 +319,8 @@ class IndexBuilder:
                         "lang",
                         "doc_len",
                         "sha256",
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(self.index_dir, "doctable"))
+                    ),
+                    os.path.join(self.index_dir, "doctable"),
                 )
                 self._finish_stage(manifest, "doctable", t0)
 
@@ -322,44 +345,19 @@ class IndexBuilder:
                         "term", "doc_id", F.col("tf").cast("int").alias("tf"), "doc_len"
                     )
                 )
-                tf.write.mode("overwrite").parquet(os.path.join(self.index_dir, "tf"))
+                write_table(tf, os.path.join(self.index_dir, "tf"))
                 self._finish_stage(manifest, "tf", t0)
             if need_pos:
-                # positional stage: (term, doc_id, doc_len, positions
-                # sorted) — bucket-partitioned like postings so a phrase
-                # query partition-prunes to its terms' buckets; doc_len
-                # rides along (one int/row) so phrase scoring needs NO
-                # doctable join at query time (J7's pattern)
+                # positional stage: doc_len rides along (one int/row) so
+                # phrase scoring needs NO doctable join at query time
+                # (J7's pattern)
                 t0 = time.time()
                 pos_rows = exploded.groupBy("term", "doc_id").agg(
                     F.sort_array(F.collect_list("pos")).alias("positions"),
                     F.first("doc_len").alias("doc_len"),
                 )
-                if cfg.compress_positions:
-                    # delta+VByte the sorted array (the same codec as the
-                    # compressed postings' doc_id gaps): positions are
-                    # strictly increasing 0-based ints, so +1 makes every
-                    # gap >= 1 as vbyte_encode_delta requires. n_pos rides
-                    # along so term-frequency consumers never decode.
-                    pos_rows = pos_rows.select(
-                        "term",
-                        "doc_id",
-                        F.size("positions").cast("int").alias("n_pos"),
-                        _encode_positions(F.col("positions")).alias(
-                            "positions_vb"
-                        ),
-                        "doc_len",
-                    )
-                (
-                    pos_rows.withColumn(
-                        "term_bucket",
-                        term_bucket_expr(F.col("term"), cfg.n_term_buckets),
-                    )
-                    .repartition(cfg.shuffle_partitions, "term_bucket")
-                    .sortWithinPartitions("term", "doc_id")
-                    .write.mode("overwrite")
-                    .partitionBy("term_bucket")
-                    .parquet(os.path.join(self.index_dir, "positions"))
+                write_positions(
+                    pos_rows, os.path.join(self.index_dir, "positions"), cfg
                 )
                 self._finish_stage(manifest, "positions", t0)
             if need_tf and need_pos:
@@ -436,12 +434,11 @@ class IndexBuilder:
                     "max_bm25", "max_tfidf", "block_size", "n_blocks",
                 )
             )
-            (
+            write_table(
                 lex.repartition(cfg.shuffle_partitions, "term_bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(os.path.join(self.index_dir, "lexicon"))
+                .sortWithinPartitions("term"),
+                os.path.join(self.index_dir, "lexicon"),
+                partition_by="term_bucket",
             )
             self._finish_stage(manifest, "lexicon", t0)
 
@@ -509,16 +506,11 @@ class IndexBuilder:
                 )
                 .withColumn("term_bucket", term_bucket_expr(F.col("term"), cfg.n_term_buckets))
             )
-
-            if cfg.compression:
-                blocks = _compress_blocks(blocks, delta=cfg.delta_docids)
-
-            (
+            write_table(
                 blocks.repartition(cfg.shuffle_partitions, "term_bucket")
-                .sortWithinPartitions("term", "block_id")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(os.path.join(self.index_dir, "postings"))
+                .sortWithinPartitions("term", "block_id"),
+                os.path.join(self.index_dir, "postings"),
+                partition_by="term_bucket",
             )
             self._finish_stage(
                 manifest, "postings", t0, {"block_mode": cfg.block_mode}
@@ -545,10 +537,8 @@ class IndexBuilder:
         # top-K. The merge is SALTED two-phase on block_id so no
         # aggregation buffer ever holds a hot term's full block set
         # (a stopword-scale term with ~1e6 block rows merges through
-        # ceil(n_blocks/256) bounded groups). Compressed indexes (tfs
-        # stored as Unary blobs — not score-able JVM-side) fall back to
-        # the tf-table scan with a df-proportional salt. Query-time
-        # driver read stays O(|terms| * K).
+        # ceil(n_blocks/256) bounded groups). Query-time driver read
+        # stays O(|terms| * K).
         if not self._stage_done(manifest, "block_summary"):
             t0 = time.time()
             post = self.spark.read.parquet(
@@ -562,86 +552,47 @@ class IndexBuilder:
                     THETA_TOPK,
                 )
 
-            if not cfg.compression:
+            def topk_of(score_fn):
+                return F.slice(
+                    F.reverse(
+                        F.array_sort(
+                            F.transform(F.arrays_zip("tfs", "doc_lens"), score_fn)
+                        )
+                    ),
+                    1,
+                    THETA_TOPK,
+                )
 
-                def topk_of(score_fn):
-                    return F.slice(
-                        F.reverse(
-                            F.array_sort(
-                                F.transform(
-                                    F.arrays_zip("tfs", "doc_lens"), score_fn
-                                )
-                            )
+            scored = (
+                post.select("term", "block_id", "tfs", "doc_lens")
+                .join(
+                    F.broadcast(lexicon.select("term", "idf", "n_blocks")),
+                    "term",
+                )
+                .select(
+                    "term",
+                    F.pmod(
+                        F.col("block_id").cast("long"),
+                        F.greatest(
+                            F.ceil(F.col("n_blocks") / F.lit(256)),
+                            F.lit(1),
                         ),
-                        1,
-                        THETA_TOPK,
-                    )
-
-                scored = (
-                    post.select("term", "block_id", "tfs", "doc_lens")
-                    .join(
-                        F.broadcast(lexicon.select("term", "idf", "n_blocks")),
-                        "term",
-                    )
-                    .select(
-                        "term",
-                        F.pmod(
-                            F.col("block_id").cast("long"),
-                            F.greatest(
-                                F.ceil(F.col("n_blocks") / F.lit(256)),
-                                F.lit(1),
-                            ),
-                        ).alias("_salt"),
-                        topk_of(
-                            lambda z: bm25_partial_expr(
-                                z["tfs"], z["doc_lens"], avgdl, cfg.k1, cfg.b
-                            )
-                            * F.col("idf")
-                        ).alias("_pb"),
-                        topk_of(
-                            lambda z: tfidf_partial_expr(z["tfs"])
-                            * F.col("idf")
-                        ).alias("_pt"),
-                    )
-                )
-                partial = scored.groupBy("term", "_salt").agg(
-                    merge_topk("_pb").alias("_pb"),
-                    merge_topk("_pt").alias("_pt"),
-                )
-            else:
-                bm25_p = bm25_partial_expr(
-                    F.col("tf"), F.col("doc_len"), avgdl, cfg.k1, cfg.b
-                )
-                tfidf_p = tfidf_partial_expr(F.col("tf"))
-                scored = (
-                    tf.join(
-                        F.broadcast(lexicon.select("term", "df", "idf")),
-                        "term",
-                    )
-                    .select(
-                        "term",
-                        (bm25_p * F.col("idf")).alias("_sb"),
-                        (tfidf_p * F.col("idf")).alias("_st"),
-                        F.pmod(
-                            F.xxhash64("doc_id"),
-                            F.greatest(
-                                F.ceil(F.col("df") / F.lit(65536)), F.lit(1)
-                            ),
-                        ).alias("_salt"),
-                    )
-                )
-                partial = scored.groupBy("term", "_salt").agg(
-                    F.slice(
-                        F.sort_array(F.collect_list("_sb"), asc=False),
-                        1,
-                        THETA_TOPK,
+                    ).alias("_salt"),
+                    topk_of(
+                        lambda z: bm25_partial_expr(
+                            z["tfs"], z["doc_lens"], avgdl, cfg.k1, cfg.b
+                        )
+                        * F.col("idf")
                     ).alias("_pb"),
-                    F.slice(
-                        F.sort_array(F.collect_list("_st"), asc=False),
-                        1,
-                        THETA_TOPK,
+                    topk_of(
+                        lambda z: tfidf_partial_expr(z["tfs"]) * F.col("idf")
                     ).alias("_pt"),
                 )
+            )
+            partial = scored.groupBy("term", "_salt").agg(
+                merge_topk("_pb").alias("_pb"),
+                merge_topk("_pt").alias("_pt"),
+            )
             summary = (
                 partial.groupBy("term")
                 .agg(
@@ -661,19 +612,11 @@ class IndexBuilder:
                     term_bucket_expr(F.col("term"), cfg.n_term_buckets),
                 )
             )
-            # n_block_rows: ACTUAL block-row count (range mode can leave
-            # planned blocks empty, so lexicon.n_blocks is only an upper
-            # bound) — kept for the engine's block-metadata fallback path
-            n_rows = post.groupBy("term").agg(
-                F.count("*").cast("int").alias("n_block_rows")
-            )
-            (
-                summary.join(n_rows, "term")
-                .repartition(cfg.shuffle_partitions, "term_bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(os.path.join(self.index_dir, "block_summary"))
+            write_table(
+                summary.repartition(cfg.shuffle_partitions, "term_bucket")
+                .sortWithinPartitions("term"),
+                os.path.join(self.index_dir, "block_summary"),
+                partition_by="term_bucket",
             )
             self._finish_stage(manifest, "block_summary", t0)
 
@@ -682,54 +625,19 @@ class IndexBuilder:
         return manifest
 
 
-@F.pandas_udf(T.BinaryType())
-def _encode_positions(col: pd.Series) -> pd.Series:
-    """delta+VByte of a sorted 0-based positions array: +1 shifts to the
-    strictly-increasing >=1 domain vbyte_encode_delta requires (the
-    decode side subtracts it back — query/engine.py phrase path)."""
-    import numpy as np
-
-    return col.map(
-        lambda a: codecs.vbyte_encode_delta(np.asarray(a, dtype="int64") + 1)
-    )
-
-
-def _compress_blocks(blocks: DataFrame, delta: bool = False) -> DataFrame:
-    """Replace the array columns with reference-format compressed binaries
-    (VByte docIds + Unary tfs) via an Arrow-batched pandas UDF.
-    doc_lens stay as a plain int array beside the blobs (parquet's own
-    page encodings compress them): carrying one int per posting in-row is
-    what keeps the compressed QUERY path free of a per-query doctable
-    shuffle join — the same trade the raw layout and the positional stage
-    already make. (The reference instead looks doc length up in its
-    RAM-resident doc table at score time, Score.java:26.)
-
-    ``delta=True`` gap-encodes the (sorted) per-block doc_ids before
-    VByte — the reference's own unfulfilled TODO (Posting.java:7); see
-    EngineConfig.delta_docids.
-    """
-    enc = codecs.vbyte_encode_delta if delta else codecs.vbyte_encode
-
-    @F.pandas_udf(T.BinaryType())
-    def vb(col: pd.Series) -> pd.Series:
-        return col.map(lambda a: enc(a))
-
-    @F.pandas_udf(T.BinaryType())
-    def un(col: pd.Series) -> pd.Series:
-        return col.map(lambda a: codecs.unary_encode(a))
-
-    return blocks.select(
-        "term",
-        "term_bucket",
-        "block_id",
-        "n_postings",
-        "min_doc_id",
-        "max_doc_id",
-        vb(F.col("doc_ids")).alias("doc_ids_vb"),
-        un(F.col("tfs")).alias("tfs_unary"),
-        "doc_lens",
-        "block_max_bm25",
-        "block_max_tfidf",
+def write_positions(pos_rows: DataFrame, path: str, cfg: EngineConfig) -> None:
+    """Positional table (term, doc_id, positions, doc_len), bucket-
+    partitioned like postings so a phrase query partition-prunes to its
+    terms' buckets and term-sorted so row-group stats skip the rest.
+    Shared by the batch build and streaming compaction."""
+    write_table(
+        pos_rows.withColumn(
+            "term_bucket", term_bucket_expr(F.col("term"), cfg.n_term_buckets)
+        )
+        .repartition(cfg.shuffle_partitions, "term_bucket")
+        .sortWithinPartitions("term", "doc_id"),
+        path,
+        partition_by="term_bucket",
     )
 
 

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
-from ..query.engine import SearchEngine
+from ..query.engine import SearchEngine, validate_query_args
 from ..sources.corpus import assign_doc_ids, filter_malformed, with_sha256
 from .builder import IndexBuilder
 
@@ -171,7 +171,7 @@ class ShardedSearchEngine:
         persisted per-block maxima embed each shard's LOCAL idf, which
         is not an upper bound under the injected global idf (module
         docstring)."""
-        del algo
+        validate_query_args(k, mode, scorer, algo)
 
         def _finish(result: DataFrame) -> DataFrame:
             if not with_docno:
@@ -205,11 +205,6 @@ class ShardedSearchEngine:
         if use_local is None:
             total_df = sum(gstats[t]["df"] for t in terms)
             use_local = total_df <= SearchEngine.LOCAL_EXEC_MAX_POSTINGS
-            if any(
-                e.config.compression and not e._decoded_has_doc_len
-                for e in self.engines
-            ):
-                use_local = False
 
         if use_local:
             parts = []
@@ -221,9 +216,9 @@ class ShardedSearchEngine:
                 if len(pdf):
                     parts.append(pdf)
             if not parts:
-                return self.spark.createDataFrame(
+                return _finish(self.spark.createDataFrame(
                     [], "rank int, doc_id long, score double"
-                )
+                ))
             merged = pd.concat(parts, ignore_index=True)
             merged = merged.sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
@@ -277,7 +272,7 @@ class ShardedSearchEngine:
         n_q_terms test uses the global term count. ``algo='maxscore'``
         degrades to DAAT here (identical results) — per-shard theta
         metadata embeds shard-local idf (see search())."""
-        del algo
+        validate_query_args(k, mode, scorer, algo)
         all_terms = sorted(
             {
                 t
@@ -323,6 +318,7 @@ class ShardedSearchEngine:
           avgdl/n_docs already injected — score bits match a single
           index exactly.
         """
+        validate_query_args(k)
         if not os.path.exists(
             os.path.join(self.engines[0].index_dir, "positions")
         ):
@@ -355,12 +351,8 @@ class ShardedSearchEngine:
                 s[t]["cf"] for _e, s in participating for t in set(terms)
             )
             # total cf across shards bounds the lone driver's footprint
-            # (it reads every participating shard's slices); per-shard
-            # layout must carry doc_len like the single-engine gate
-            use_local = total_cf <= SearchEngine.LOCAL_EXEC_MAX_POSTINGS and all(
-                "doc_len" in e._positions_dataset().schema.names
-                for e, _s in participating
-            )
+            # (it reads every participating shard's slices)
+            use_local = total_cf <= SearchEngine.LOCAL_EXEC_MAX_POSTINGS
 
         if use_local:
             parts = []

@@ -45,19 +45,45 @@ from __future__ import annotations
 
 import json
 import math
+import numbers
 import os
-from typing import Iterator, Optional, Sequence
+from typing import Optional, Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..functions.scoring import bm25_partial_expr, tfidf_partial_expr
 from ..functions.text import tokenize_query_py
-from ..index.builder import term_bucket_py
+from ..index.builder import THETA_TOPK, term_bucket_py
+
+MODES = ("disjunctive", "conjunctive")
+SCORERS = ("bm25", "tfidf")
+ALGOS = ("daat", "maxscore")
+
+
+def validate_query_args(
+    k, mode: str = "disjunctive", scorer: str = "bm25", algo: str = "daat"
+) -> None:
+    """The one argument check of every query entry point (single and
+    sharded; search, batch_search, phrase_search): every route rejects
+    the same invalid input with the same ValueError instead of quietly
+    scoring something else (``scorer="BM25"`` used to score TFIDF,
+    ``mode="conj"`` ran disjunctive, and ``k=-1`` returned every match
+    on the driver-local route but raised in Spark)."""
+    for name, value, allowed in (
+        ("mode", mode, MODES),
+        ("scorer", scorer, SCORERS),
+        ("algo", algo, ALGOS),
+    ):
+        if value not in allowed:
+            raise ValueError(
+                f"unknown {name} {value!r}: expected one of {', '.join(allowed)}"
+            )
+    if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k < 1:
+        raise ValueError(f"k must be a positive integer, got {k!r}")
 
 
 class SearchEngine:
@@ -91,10 +117,6 @@ class SearchEngine:
         self.local_exec: Optional[bool] = None
         self.postings = spark.read.parquet(os.path.join(self.index_dir, "postings"))
         self.doctable = spark.read.parquet(os.path.join(self.index_dir, "doctable"))
-        # schema facts resolved ONCE (a .columns probe mid-query forces a
-        # fresh analysis pass — measurable per-query planning cost)
-        self._has_block_range = "min_doc_id" in self.postings.columns
-        self._decoded_has_doc_len = "doc_lens" in self.postings.columns
 
     def refresh(self) -> None:
         """Invalidate the per-term memo caches and re-read the index
@@ -122,8 +144,6 @@ class SearchEngine:
         self.doctable = self.spark.read.parquet(
             os.path.join(self.index_dir, "doctable")
         )
-        self._has_block_range = "min_doc_id" in self.postings.columns
-        self._decoded_has_doc_len = "doc_lens" in self.postings.columns
 
     def warm(self) -> "SearchEngine":
         """Pin the postings frame in executor memory and materialize it —
@@ -246,8 +266,8 @@ class SearchEngine:
         """Per-term skip-block metadata (block_max_bm25/tfidf, n_postings)
         — the driver-side analogue of the reference's RAM-resident skip
         info (SkipList.java:24-46). Column-projected pyarrow read of the
-        postings table: parquet being columnar, the posting arrays/blobs
-        are never touched — this reads 3 small columns of the query
+        postings table: parquet being columnar, the posting arrays are
+        never touched — this reads 3 small columns of the query
         terms' bucket partitions only. Memoized per engine instance."""
         missing = [t for t in terms if t not in self._block_max_cache]
         if missing:
@@ -269,16 +289,12 @@ class SearchEngine:
         return {t: self._block_max_cache[t] for t in terms}
 
     def _block_summary(self, terms: Sequence[str]) -> dict[str, dict]:
-        """Per-term top-K block maxima + actual block-row count from the
-        ``block_summary`` stage (one row per term — the lexicon's shape,
-        not the postings'). This bounds the theta metadata read at
-        O(|terms| * K) driver bytes even for a stopword-scale term whose
-        postings span ~1e6 block rows. Memoized; absent terms map to
-        None. Returns {} when the index predates the stage (pre-r3) —
-        callers then fall back to :meth:`_block_maxima`."""
+        """Per-term top-K posting scores from the ``block_summary`` stage
+        (one row per term — the lexicon's shape, not the postings').
+        This bounds the theta metadata read at O(|terms| * K) driver
+        bytes even for a stopword-scale term whose postings span ~1e6
+        block rows. Memoized; absent terms are left out."""
         summ_dir = os.path.join(self.index_dir, "block_summary")
-        if not os.path.exists(summ_dir):
-            return {}
         if self._block_summary_full:
             return {
                 t: self._block_summary_cache[t]
@@ -301,7 +317,7 @@ class SearchEngine:
             # total_byte_size from the footers — no data read) times a
             # measured pylist expansion factor, NOT compressed file
             # size: the cache stores to_pylist() dicts whose Python
-            # object overhead dwarfs the snappy-compressed footprint.
+            # object overhead dwarfs the compressed footprint.
             # Decided once per engine instance (refresh() resets).
             if self._block_summary_should_load is None:
                 unc = 0
@@ -346,40 +362,29 @@ class SearchEngine:
     ) -> float:
         """Lower bound on the k-th best final score, from metadata alone.
 
-        Preferred form (index >= r3): the k-th largest single-POSTING
-        score of any one query term. Within one term each posting is a
-        distinct doc, so its top-k posting scores are achieved by k
-        DISTINCT docs — and every partial score is positive (idf > 0
-        because df <= true_docs < n_docs under Q-1 inflation), so final
-        scores only exceed them. This is the strongest bound single-term
+        For k <= THETA_TOPK: the k-th largest single-POSTING score of
+        any one query term, read from the block_summary stage. Within
+        one term each posting is a distinct doc, so its top-k posting
+        scores are achieved by k DISTINCT docs — and every partial score
+        is positive (idf > 0 because df <= true_docs < n_docs under Q-1
+        inflation), so final scores only exceed them. This is the strongest bound single-term
         metadata can give, and it is what makes a RARE query term (df in
         [k, ~1000] — the discriminative term of a typical query) push
         theta to its idf scale: the r2 block-max form needed >= k skip
         blocks, which rare terms never have, so exactly the queries
         MaxScore should win collapsed to theta ~= 0.
 
-        Fallbacks, in order: per-term top-100 block maxima (r2-era
-        block_summary; the k-th block max is also achieved by k distinct
-        docs since blocks partition disjoint doc ranges), then the
-        per-block metadata scan (pre-r2 index or k > stored K)."""
-        bm_key = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
-        post_key = "top_post_bm25" if scorer == "bm25" else "top_post_tfidf"
-        blk_key = (
-            "top_block_max_bm25" if scorer == "bm25" else "top_block_max_tfidf"
-        )
+        For k beyond the stored K: the k-th largest per-block maximum,
+        from a scan of the per-block metadata (also achieved by k
+        distinct docs, since blocks partition disjoint doc ranges)."""
         theta = 0.0
-        summary = self._block_summary(terms) if k <= 100 else {}
-        if summary:
-            for t in terms:
-                row = summary.get(t)
-                if row is None:
-                    continue
-                top_posts = row.get(post_key)
-                if top_posts is not None and len(top_posts) >= k:
-                    theta = max(theta, top_posts[k - 1])
-                elif row.get(blk_key) is not None and row["n_block_rows"] >= k:
-                    theta = max(theta, row[blk_key][k - 1])
+        if k <= THETA_TOPK:
+            post_key = "top_post_bm25" if scorer == "bm25" else "top_post_tfidf"
+            for row in self._block_summary(terms).values():
+                if len(row[post_key]) >= k:
+                    theta = max(theta, row[post_key][k - 1])
             return theta
+        bm_key = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
         for t, blocks in self._block_maxima(terms).items():
             if len(blocks) >= k:
                 kth = sorted((b[bm_key] for b in blocks), reverse=True)[k - 1]
@@ -402,8 +407,6 @@ class SearchEngine:
         import numpy as np
         import pyarrow.dataset as ds
 
-        from ..functions.codecs import vbyte_decode, vbyte_decode_delta
-
         bm_col = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
         ub_key = "max_bm25" if scorer == "bm25" else "max_tfidf"
         dataset = self._postings_dataset()
@@ -415,22 +418,11 @@ class SearchEngine:
         buckets = sorted(
             {term_bucket_py(t, self.config.n_term_buckets) for t in essential}
         )
-        col = "doc_ids_vb" if self.config.compression else "doc_ids"
-        tbl = dataset.to_table(
-            filter=ds.field("term_bucket").isin(buckets) & expr, columns=[col]
-        )
-        if self.config.compression:
-            dec = (
-                vbyte_decode_delta
-                if self.config.delta_docids
-                else vbyte_decode
-            )
-            arrs = [dec(b.as_py()) for b in tbl[col]]
-        else:
-            arrs = [np.asarray(a.as_py(), dtype=np.int64) for a in tbl[col]]
-        if not arrs:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate(arrs))
+        ids = dataset.to_table(
+            filter=ds.field("term_bucket").isin(buckets) & expr,
+            columns=["doc_ids"],
+        )["doc_ids"].combine_chunks().flatten()
+        return np.unique(ids.to_numpy(zero_copy_only=False).astype(np.int64))
 
     # above this many distinct terms, the per-term In() predicate stops
     # paying: planning/pushdown cost grows with the literal list while
@@ -454,7 +446,7 @@ class SearchEngine:
 
         ``block_thresh`` (MaxScore) drops whole blocks BEFORE the arrays
         are touched: a block of term t with block_max < thresh[t] is
-        skipped — parquet never reads its array/blob columns. Only exact
+        skipped — parquet never reads its array columns. Only exact
         when the caller also applies the theta score filter (see
         _maxscore for the bound argument).
 
@@ -484,8 +476,7 @@ class SearchEngine:
                 {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
             )
             blocks = self.postings.filter(F.col("term_bucket").isin(buckets))
-        has_range = self._has_block_range
-        if candidate_ids is not None and len(candidate_ids) > 0 and has_range:
+        if candidate_ids is not None and len(candidate_ids) > 0:
             ids = [int(x) for x in candidate_ids]
             csv = ",".join(map(str, ids))
             # one SQL string = ONE py4j round-trip (the Column-API form
@@ -500,7 +491,7 @@ class SearchEngine:
                     "c -> c >= min_doc_id AND c <= max_doc_id)"
                 )
             )
-        if candidate_range is not None and has_range:
+        if candidate_range is not None:
             blocks = blocks.join(
                 F.broadcast(candidate_range),
                 (candidate_range["doc_id"] >= blocks["min_doc_id"])
@@ -519,24 +510,15 @@ class SearchEngine:
                     F.lit(float("-inf")),
                 )
             )
-        if self.config.compression:
-            exploded = _decode_blocks(blocks, delta=self.config.delta_docids)
-            if not self._decoded_has_doc_len:
-                # pre-r3 compressed index without in-row doc_lens: re-join
-                # the doctable (one shuffle the current layout avoids)
-                exploded = exploded.join(
-                    self.doctable.select("doc_id", "doc_len"), "doc_id"
-                )
-        else:
-            exploded = blocks.select(
-                "term",
-                F.explode(F.arrays_zip("doc_ids", "tfs", "doc_lens")).alias("p"),
-            ).select(
-                "term",
-                F.col("p.doc_ids").alias("doc_id"),
-                F.col("p.tfs").alias("tf"),
-                F.col("p.doc_lens").alias("doc_len"),
-            )
+        exploded = blocks.select(
+            "term",
+            F.explode(F.arrays_zip("doc_ids", "tfs", "doc_lens")).alias("p"),
+        ).select(
+            "term",
+            F.col("p.doc_ids").alias("doc_id"),
+            F.col("p.tfs").alias("tf"),
+            F.col("p.doc_lens").alias("doc_len"),
+        )
         if candidate_ids is not None and len(candidate_ids) > 0:
             # exact candidate restriction pre-aggregation (InSet — a hash
             # probe per exploded row); redundant for correctness under
@@ -643,6 +625,7 @@ class SearchEngine:
         with local=False, the distributed plan runs. Results are
         bit-identical either way (same formulas, same summation order,
         same tie-break)."""
+        validate_query_args(k, mode, scorer, algo)
         terms = self.tokenize_query(query)
         stats = self._term_stats(terms)
         terms = [t for t in terms if t in stats]  # drop unknown terms (J5)
@@ -685,10 +668,6 @@ class SearchEngine:
             return False
         if override is None and self.local_exec is False:
             return False
-        if self.config.compression and not self._decoded_has_doc_len:
-            # pre-r3 compressed layout: doc_len would need a doctable
-            # join the local path doesn't do
-            return False
         if override or self.local_exec:
             return True
         return (
@@ -712,12 +691,6 @@ class SearchEngine:
         import numpy as np
         import pyarrow.dataset as ds
 
-        from ..functions.codecs import (
-            unary_decode,
-            vbyte_decode,
-            vbyte_decode_delta,
-        )
-
         dataset = self._postings_dataset()
         buckets = sorted(
             {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
@@ -736,11 +709,9 @@ class SearchEngine:
                 )
                 pruned = e if pruned is None else (pruned | e)
             expr = expr & pruned
-        if self.config.compression:
-            cols = ["term", "n_postings", "doc_ids_vb", "tfs_unary", "doc_lens"]
-        else:
-            cols = ["term", "doc_ids", "tfs", "doc_lens"]
-        tbl = dataset.to_table(filter=expr, columns=cols).combine_chunks()
+        tbl = dataset.to_table(
+            filter=expr, columns=["term", "doc_ids", "tfs", "doc_lens"]
+        ).combine_chunks()
         term_col = tbl["term"].to_pylist()
 
         def flat(name, dtype):
@@ -757,32 +728,13 @@ class SearchEngine:
             )
 
         out: dict[str, list] = {t: [[], [], []] for t in terms}
-        if self.config.compression:
-            dl_vals, dl_off = flat("doc_lens", np.float64)
-            dec = (
-                vbyte_decode_delta
-                if self.config.delta_docids
-                else vbyte_decode
-            )
-            vb = tbl["doc_ids_vb"]
-            un = tbl["tfs_unary"]
-            np_col = tbl["n_postings"].to_numpy(zero_copy_only=False)
-            for r, t in enumerate(term_col):
-                out[t][0].append(dec(vb[r].as_py()))
-                out[t][1].append(
-                    unary_decode(un[r].as_py(), int(np_col[r])).astype(
-                        np.float64
-                    )
-                )
-                out[t][2].append(dl_vals[dl_off[r] : dl_off[r + 1]])
-        else:
-            id_vals, id_off = flat("doc_ids", np.int64)
-            tf_vals, tf_off = flat("tfs", np.float64)
-            dl_vals, dl_off = flat("doc_lens", np.float64)
-            for r, t in enumerate(term_col):
-                out[t][0].append(id_vals[id_off[r] : id_off[r + 1]])
-                out[t][1].append(tf_vals[tf_off[r] : tf_off[r + 1]])
-                out[t][2].append(dl_vals[dl_off[r] : dl_off[r + 1]])
+        id_vals, id_off = flat("doc_ids", np.int64)
+        tf_vals, tf_off = flat("tfs", np.float64)
+        dl_vals, dl_off = flat("doc_lens", np.float64)
+        for r, t in enumerate(term_col):
+            out[t][0].append(id_vals[id_off[r] : id_off[r + 1]])
+            out[t][1].append(tf_vals[tf_off[r] : tf_off[r + 1]])
+            out[t][2].append(dl_vals[dl_off[r] : dl_off[r + 1]])
 
         def cat(parts, dtype):
             return (
@@ -891,14 +843,10 @@ class SearchEngine:
     ) -> bool:
         """Gate for the driver-local phrase path: total cf (one position
         int per term occurrence) under the same RAM bound as
-        _local_ok's df sum, and a positions layout that carries doc_len
-        (every build >= r2)."""
+        _local_ok's df sum."""
         if override is False:
             return False
         if override is None and self.local_exec is False:
-            return False
-        names = self._positions_dataset().schema.names
-        if "doc_len" not in names:
             return False
         if override or self.local_exec:
             return True
@@ -926,23 +874,17 @@ class SearchEngine:
         import numpy as np
         import pyarrow.dataset as ds
 
-        from ..functions.codecs import vbyte_decode_delta
         from ..functions.scoring import bm25_partial_py
 
         L = len(terms)
         dataset = self._positions_dataset()
-        names = dataset.schema.names
-        compressed = "positions_vb" in names
         buckets = sorted(
             {term_bucket_py(t, self.config.n_term_buckets) for t in set(terms)}
-        )
-        cols = ["term", "doc_id", "doc_len"] + (
-            ["positions_vb"] if compressed else ["positions"]
         )
         tbl = dataset.to_table(
             filter=ds.field("term_bucket").isin(buckets)
             & ds.field("term").isin(list(set(terms))),
-            columns=cols,
+            columns=["term", "doc_id", "doc_len", "positions"],
         ).combine_chunks()
 
         def empty():
@@ -970,16 +912,10 @@ class SearchEngine:
         dl_col = tbl["doc_len"].to_numpy(zero_copy_only=False).astype(
             np.float64
         )
-        if compressed:
-            pos_rows = [
-                (vbyte_decode_delta(b.as_py()) - 1).astype(np.int64)
-                for b in tbl["positions_vb"]
-            ]
-        else:
-            arr = tbl["positions"].chunk(0)
-            vals = arr.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            pos_rows = [vals[offs[r] : offs[r + 1]] for r in range(len(offs) - 1)]
+        arr = tbl["positions"].chunk(0)
+        vals = arr.values.to_numpy(zero_copy_only=False).astype(np.int64)
+        offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        pos_rows = [vals[offs[r] : offs[r + 1]] for r in range(len(offs) - 1)]
 
         docs_unique, doc_idx = np.unique(doc_col, return_inverse=True)
         dl_by_doc = np.zeros(docs_unique.size, dtype=np.float64)
@@ -1145,7 +1081,7 @@ class SearchEngine:
         # theta by the same bound appear ONLY in unpruned blocks, so
         # their scores are computed exactly: rank-identical to DAAT.
         # JVM-side filter on the per-block max column => parquet skips
-        # the pruned blocks' array/blob columns entirely.
+        # the pruned blocks' array columns entirely.
         block_thresh = None
         if theta > 0.0:
             block_thresh = {
@@ -1249,11 +1185,6 @@ class SearchEngine:
         blocks = self.postings.filter(self._bucket_filter(essential)).filter(
             F.col(bm_col) >= F.element_at(thresh_map, F.col("term"))
         )
-        if self.config.compression:
-            # doc_lens dropped pre-decode: candidates only need doc_id
-            return _decode_blocks(
-                blocks.drop("doc_lens"), delta=self.config.delta_docids
-            ).select("doc_id")
         return blocks.select(F.explode("doc_ids").alias("doc_id"))
 
     # ---------- phrase queries (positional index; beyond-reference) ----------
@@ -1318,6 +1249,7 @@ class SearchEngine:
         matches nothing (unlike the disjunctive paths'
         drop-unknown-terms rule — dropping a phrase word would silently
         change the phrase)."""
+        validate_query_args(k)
         pos_dir = os.path.join(self.index_dir, "positions")
         if not os.path.exists(pos_dir):
             raise RuntimeError(
@@ -1356,18 +1288,10 @@ class SearchEngine:
         # parquet scan — positions files are term-sorted within each
         # bucket, so row-group min/max stats skip everything else; the
         # later element_at null-drop would discard those rows anyway,
-        # but only AFTER exploding / decoding them)
+        # but only AFTER exploding them)
         pos = self._positions_df.filter(self._bucket_filter(terms)).filter(
             F.col("term").isin(list(set(terms)))
         )
-        if "positions_vb" in pos.columns:
-            # compressed positional layout (EngineConfig.compress_positions):
-            # decode in-flight AFTER the bucket prune — only the phrase
-            # terms' rows pay the codec, and the scan never reads an int
-            # array column at all
-            pos = pos.withColumn(
-                "positions", _decode_positions(F.col("positions_vb"))
-            )
         # term -> ARRAY of phrase offsets as a literal map: a term
         # repeated in the phrase ("big data big") occupies several
         # offsets, and each position row must fan out to all of them —
@@ -1384,14 +1308,13 @@ class SearchEngine:
                 for x in (F.lit(t), F.array(*[F.lit(i) for i in idxs]))
             ]
         )
-        has_doc_len = "doc_len" in pos.columns
-        cols = [
-            "doc_id",
-            F.element_at(imap, F.col("term")).alias("_is"),
-            F.explode("positions").alias("p"),
-        ] + ([F.col("doc_len")] if has_doc_len else [])
         bases = (
-            pos.select(*cols)
+            pos.select(
+                "doc_id",
+                F.element_at(imap, F.col("term")).alias("_is"),
+                F.explode("positions").alias("p"),
+                "doc_len",
+            )
             .select("*", F.explode("_is").alias("i"))
             .drop("_is")
             .withColumn("base", F.col("p") - F.col("i"))
@@ -1413,14 +1336,15 @@ class SearchEngine:
         else:
             cover = F.count_distinct("i").alias("cover")
             cover_hit = F.col("cover") == len(terms)
-        agg = [cover] + (
-            [F.first("doc_len").alias("doc_len")] if has_doc_len else []
+        occ = (
+            bases.groupBy("doc_id", "base")
+            .agg(cover, F.first("doc_len").alias("doc_len"))
+            .filter(cover_hit)
         )
-        occ = bases.groupBy("doc_id", "base").agg(*agg).filter(cover_hit)
-        ptf_aggs = [F.count("*").cast("int").alias("phrase_tf")] + (
-            [F.first("doc_len").alias("doc_len")] if has_doc_len else []
+        ptf = occ.groupBy("doc_id").agg(
+            F.count("*").cast("int").alias("phrase_tf"),
+            F.first("doc_len").alias("doc_len"),
         )
-        ptf = occ.groupBy("doc_id").agg(*ptf_aggs)
         # ONE positions scan. Both remaining consumers — the top-k
         # ranking and the 1-row phrase_df count — read this matched-doc
         # frame; un-persisted, the broadcast count subtree would
@@ -1435,16 +1359,6 @@ class SearchEngine:
 
         ptf = ptf.persist(StorageLevel.MEMORY_AND_DISK)
         self._retire_phrase_cache(ptf)
-        if has_doc_len:
-            # doc_len rides in the positions rows (build >= r2): no
-            # doctable join — the whole query is scan -> two aggs -> topk
-            scored = ptf
-        else:
-            # legacy positional index without doc_len: broadcast the tiny
-            # matched-doc side and stream the doctable past it
-            scored = self.doctable.select("doc_id", "doc_len").join(
-                F.broadcast(ptf), "doc_id"
-            )
         cfg = self.config
         partial = bm25_partial_expr(
             F.col("phrase_tf"), F.col("doc_len"), self.stats["avgdl"], cfg.k1, cfg.b
@@ -1458,8 +1372,10 @@ class SearchEngine:
         # Window.partitionBy() would funnel every matching doc through
         # one task) and scale only the k winners. Same bits as scaling
         # pre-top-k: one double multiply, same operand order.
+        # doc_len rides in the positions rows: no doctable join — the
+        # whole query is scan -> two aggs -> topk
         topk = (
-            scored.select("doc_id", partial.alias("_partial"), "phrase_tf")
+            ptf.select("doc_id", partial.alias("_partial"), "phrase_tf")
             .orderBy(F.desc("_partial"), F.asc("doc_id"))
             .limit(k)
         )
@@ -1513,6 +1429,7 @@ class SearchEngine:
         ``algo='maxscore'`` applies each query's metadata-derived theta
         (see _theta_from_blocks) as an exact score pre-filter; results
         are identical to DAAT by construction either way."""
+        validate_query_args(k, mode, scorer, algo)
         tokenized = [(qid, self.tokenize_query(text)) for qid, text in queries]
         all_terms = sorted({t for _, ts in tokenized for t in ts})
         # ``term_stats`` lets a scatter-gather caller (index/sharded.py)
@@ -1604,65 +1521,3 @@ class SearchEngine:
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score")
         )
-
-
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def _decode_positions(col: pd.Series) -> pd.Series:
-    """Inverse of index/builder.py _encode_positions: delta+VByte decode
-    then -1 back to 0-based positions. Arrow-batched; one numpy array
-    per row, no per-row Python beyond the codec call."""
-    from ..functions import codecs
-
-    return col.map(
-        lambda b: (codecs.vbyte_decode_delta(b) - 1).astype("int32")
-    )
-
-
-def _decode_blocks(blocks: DataFrame, delta: bool = False) -> DataFrame:
-    """mapInPandas decoder for compressed blocks -> (term, doc_id, tf
-    [, doc_len]). Fully vectorized per Arrow batch: the codecs return
-    numpy arrays which are np.concatenate'd into ONE output frame per
-    batch (the term column via np.repeat) — no per-block-row pandas
-    DataFrame allocation, which on a big compressed query was millions
-    of tiny frames. Input is column-pruned to exactly the decoder's
-    needs so the parquet scan skips block metadata columns. ``delta``
-    selects the gap-encoded docID layout (EngineConfig.delta_docids)."""
-    import numpy as np
-
-    from ..functions import codecs
-
-    has_dl = "doc_lens" in blocks.columns
-    cols = ["term", "n_postings", "doc_ids_vb", "tfs_unary"] + (
-        ["doc_lens"] if has_dl else []
-    )
-    schema = "term string, doc_id long, tf int" + (
-        ", doc_len int" if has_dl else ""
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            dec = codecs.vbyte_decode_delta if delta else codecs.vbyte_decode
-            ids = [dec(b) for b in pdf["doc_ids_vb"]]
-            tfs = [
-                codecs.unary_decode(b, n)
-                for b, n in zip(pdf["tfs_unary"], pdf["n_postings"])
-            ]
-            counts = np.fromiter(
-                (len(a) for a in ids), dtype=np.int64, count=len(ids)
-            )
-            out = {
-                "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "doc_id": np.concatenate(ids) if ids else np.empty(0, np.int64),
-                "tf": (
-                    np.concatenate(tfs) if tfs else np.empty(0, np.int64)
-                ).astype("int32"),
-            }
-            if has_dl:
-                out["doc_len"] = np.concatenate(
-                    [np.asarray(a, dtype=np.int32) for a in pdf["doc_lens"]]
-                )
-            yield pd.DataFrame(out)
-
-    return blocks.select(*cols).mapInPandas(gen, schema)

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from ..config import EngineConfig
 from ..functions.text import tokenize_raw
-from ..index.builder import stem_terms
+from ..index.builder import stem_terms, write_table
 from ..sources.corpus import assign_doc_ids, filter_malformed, with_sha256
 
 CORPUS_SCHEMA = T.StructType(
@@ -149,11 +149,7 @@ class StreamingIndexer:
             # carried through so compact(latest_only) can order same-file
             # re-ingests that arrive within ONE micro-batch by real time
             doct_cols.append(F.col("event_time"))
-        (
-            tokenized.select(*doct_cols)
-            .write.mode("overwrite")
-            .parquet(doct_dir)
-        )
+        write_table(tokenized.select(*doct_cols), doct_dir)
 
         seg_dir = os.path.join(self.index_dir, "segments", f"batch_id={batch_id}")
         # posexplode keeps the post-pipeline token index: ignored by the
@@ -167,12 +163,11 @@ class StreamingIndexer:
         )
         if cfg.positions:
             exploded = exploded.persist()
-        (
+        write_table(
             exploded.groupBy("term", "doc_id", "doc_len")
             .agg(F.count("*").cast("int").alias("tf"))
-            .select("term", "doc_id", "tf", "doc_len")
-            .write.mode("overwrite")
-            .parquet(seg_dir)
+            .select("term", "doc_id", "tf", "doc_len"),
+            seg_dir,
         )
         if cfg.positions:
             # positional segment, same shape as the batch builder's
@@ -180,14 +175,12 @@ class StreamingIndexer:
             pos_dir = os.path.join(
                 self.index_dir, "positions_segments", f"batch_id={batch_id}"
             )
-            (
-                exploded.groupBy("term", "doc_id")
-                .agg(
+            write_table(
+                exploded.groupBy("term", "doc_id").agg(
                     F.sort_array(F.collect_list("pos")).alias("positions"),
                     F.first("doc_len").alias("doc_len"),
-                )
-                .write.mode("overwrite")
-                .parquet(pos_dir)
+                ),
+                pos_dir,
             )
             exploded.unpersist()
 
@@ -256,7 +249,7 @@ class StreamingIndexer:
         work on streaming-built indexes; compacting a positions-enabled
         config over segments ingested WITHOUT positions raises instead
         of crashing inside the batch builder."""
-        from ..index.builder import IndexBuilder, term_bucket_expr
+        from ..index.builder import IndexBuilder, write_positions
 
         out = (out_dir or os.path.join(self.index_dir, "compacted")).rstrip("/")
         seg_root = os.path.join(self.index_dir, "segments")
@@ -315,45 +308,16 @@ class StreamingIndexer:
         self.config.save(out)
 
         t0 = time.time()
-        doct.drop("event_time").write.mode("overwrite").parquet(
-            os.path.join(out, "doctable")
-        )
+        write_table(doct.drop("event_time"), os.path.join(out, "doctable"))
         builder._finish_stage(manifest, "doctable", t0)
 
         t0 = time.time()
-        tf.write.mode("overwrite").parquet(os.path.join(out, "tf"))
+        write_table(tf, os.path.join(out, "tf"))
         builder._finish_stage(manifest, "tf", t0)
 
         if pos is not None:
-            # same layout as the batch builder's positions stage:
-            # bucket-partitioned so phrase queries partition-prune
             t0 = time.time()
-            if self.config.compress_positions:
-                # segments stay raw (small per-batch files, appendable);
-                # the durable compacted table takes the delta+VByte
-                # layout, same as a batch build with this config
-                from ..index.builder import _encode_positions
-
-                pos = pos.select(
-                    "term",
-                    "doc_id",
-                    F.size("positions").cast("int").alias("n_pos"),
-                    _encode_positions(F.col("positions")).alias(
-                        "positions_vb"
-                    ),
-                    "doc_len",
-                )
-            (
-                pos.withColumn(
-                    "term_bucket",
-                    term_bucket_expr(F.col("term"), self.config.n_term_buckets),
-                )
-                .repartition(self.config.shuffle_partitions, "term_bucket")
-                .sortWithinPartitions("term", "doc_id")
-                .write.mode("overwrite")
-                .partitionBy("term_bucket")
-                .parquet(os.path.join(out, "positions"))
-            )
+            write_positions(pos, os.path.join(out, "positions"), self.config)
             builder._finish_stage(manifest, "positions", t0)
 
         # remaining stages (stats, lexicon, postings, block_summary) via

@@ -61,62 +61,3 @@ def test_sorted_docids_roundtrip():
     ids = np.cumsum(rng.integers(1, 10_000, 5000)).astype(np.int64)
     out = vbyte_decode(vbyte_encode(ids))
     assert (out == ids).all()
-
-
-# ---------- delta-VByte layout (EngineConfig.delta_docids, round 4) ----------
-
-def test_delta_reference_vector():
-    from searchengine_spark.functions.codecs import (
-        vbyte_decode_delta,
-        vbyte_encode_delta,
-    )
-
-    ids = [5, 9, 10, 300]
-    # gaps [5, 4, 1, 290] each VByte'd with the SAME byte layout as the
-    # raw codec — the delta layer changes values, not the wire format
-    assert vbyte_encode_delta(ids) == vbyte_encode([5, 4, 1, 290])
-    assert vbyte_decode_delta(vbyte_encode_delta(ids)).tolist() == ids
-
-
-def test_delta_rejects_non_increasing():
-    import pytest
-
-    from searchengine_spark.functions.codecs import vbyte_encode_delta
-
-    with pytest.raises(ValueError):
-        vbyte_encode_delta([3, 3])
-    with pytest.raises(ValueError):
-        vbyte_encode_delta([5, 4])
-    with pytest.raises(ValueError):
-        vbyte_encode_delta([0, 4])
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=1, max_value=2**31 - 1),
-        min_size=1,
-        max_size=300,
-        unique=True,
-    )
-)
-def test_delta_roundtrip_property(values):
-    from searchengine_spark.functions.codecs import (
-        vbyte_decode_delta,
-        vbyte_encode_delta,
-    )
-
-    ids = sorted(values)
-    assert vbyte_decode_delta(vbyte_encode_delta(ids)).tolist() == ids
-
-
-def test_delta_shrinks_dense_sorted_lists():
-    from searchengine_spark.functions.codecs import vbyte_encode_delta
-
-    rng = np.random.default_rng(42)
-    # dense list starting deep in a 10^12-doc id space: absolute ids
-    # cost ~6 bytes each, gaps of 1-10k cost 1-2
-    ids = (10**12 + np.cumsum(rng.integers(1, 10_000, 5000))).astype(np.int64)
-    raw = len(vbyte_encode(ids))
-    delta = len(vbyte_encode_delta(ids))
-    assert delta < raw / 2.5

@@ -1,7 +1,6 @@
 """Equivalence suites — the reference's DAAT-vs-MaxScore intent
-(TestPerformance comparisons), extended: DAAT == MaxScore, uncompressed ==
-compressed index, count-mode == range-mode blocks, results invariant to
-parallelism."""
+(TestPerformance comparisons), extended: DAAT == MaxScore, count-mode ==
+range-mode blocks, results invariant to parallelism."""
 
 import pytest
 
@@ -35,33 +34,6 @@ def test_daat_equals_maxscore(engine, scorer):
         daat = _results(engine, q, scorer=scorer, algo="daat")
         ms = _results(engine, q, scorer=scorer, algo="maxscore")
         assert daat == ms, (q, scorer)
-
-
-@pytest.fixture(scope="module")
-def compressed_dir(spark, corpus, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idxc") / "idx")
-    cfg = EngineConfig(stopstem=True, skip_threshold=64, compression=True,
-                       shuffle_partitions=8)
-    build_index(spark, corpus, d, cfg)
-    return d
-
-
-def test_compressed_index_same_results(spark, engine, compressed_dir):
-    ce = SearchEngine(spark, compressed_dir)
-    for q in QUERIES:
-        assert _results(engine, q) == _results(ce, q), q
-
-
-def test_compressed_batch_and_maxscore_paths(spark, engine, compressed_dir):
-    """The codec decode path must also back the batch join (in-row
-    doc_lens since r3) and MaxScore's block-pruned candidate scan."""
-    ce = SearchEngine(spark, compressed_dir)
-    qs = [(f"q{i}", q) for i, q in enumerate(QUERIES[:3])]
-    raw = engine.batch_search(qs, k=10).orderBy("query_id", "rank").collect()
-    comp = ce.batch_search(qs, k=10).orderBy("query_id", "rank").collect()
-    assert [tuple(r) for r in raw] == [tuple(r) for r in comp]
-    for q in QUERIES[:3]:
-        assert _results(engine, q) == _results(ce, q, algo="maxscore"), q
 
 
 @pytest.fixture(scope="module")

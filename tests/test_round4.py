@@ -1,6 +1,7 @@
 """Round-4 pins: k beyond the stored THETA_TOPK arrays falls back to the
 per-block metadata scan and stays DAAT-identical; the block_summary
-RAM-load decision is memoized per engine instance."""
+RAM-load decision is memoized per engine instance; MaxScore's
+driver-side candidate read stays DAAT-identical."""
 
 import pytest
 
@@ -65,63 +66,27 @@ def test_block_summary_load_decision_memoized(engine):
     assert engine._block_summary_should_load is None
 
 
-# ---------- delta-docID compressed index (EngineConfig.delta_docids) ----------
+def test_candidates_driver_path(engine, monkeypatch):
+    """The driver-side pyarrow candidate read (_candidates_driver):
+    force the range-prune path and check MaxScore == DAAT."""
+    calls = []
+    real = engine._candidates_driver
 
-QUERIES4 = [
-    "spark table join fast",
-    "window agg customer stream",
-    "index merge batch",
-]
+    def spy(*args, **kwargs):
+        ids = real(*args, **kwargs)
+        calls.append(len(ids))
+        return ids
 
-
-@pytest.fixture(scope="module")
-def delta_dir(spark, corpus, tmp_path_factory):
-    from searchengine_spark.config import EngineConfig
-    from searchengine_spark.index.builder import build_index
-
-    d = str(tmp_path_factory.mktemp("idxd") / "idx")
-    cfg = EngineConfig(
-        stopstem=True,
-        skip_threshold=64,
-        compression=True,
-        delta_docids=True,
-        shuffle_partitions=8,
-    )
-    build_index(spark, corpus, d, cfg)
-    return d
-
-
-def _res(eng, q, **kw):
-    return [
-        (r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in eng.search(q, k=10, **kw).collect()
+    monkeypatch.setattr(engine, "_candidates_driver", spy)
+    monkeypatch.setattr(engine, "PRUNE_MIN_POSTINGS", 0, raising=False)
+    q = "dup spark batch"  # one rare term: the essential list is small
+    want = [
+        (r["rank"], r["doc_id"], r["score"])
+        for r in engine.search(q, k=10, local=False).collect()
     ]
-
-
-def test_delta_index_matches_raw_results(spark, engine, delta_dir):
-    de = SearchEngine(spark, delta_dir)
-    assert de.config.delta_docids and de.config.compression
-    for q in QUERIES4:
-        assert _res(engine, q) == _res(de, q), q
-        assert _res(engine, q) == _res(de, q, algo="maxscore"), q
-
-
-def test_delta_index_batch_path(spark, engine, delta_dir):
-    de = SearchEngine(spark, delta_dir)
-    qs = [(f"q{i}", q) for i, q in enumerate(QUERIES4)]
-    raw = engine.batch_search(qs, k=10).orderBy("query_id", "rank").collect()
-    dl = de.batch_search(qs, k=10).orderBy("query_id", "rank").collect()
-    assert [tuple(r) for r in raw] == [tuple(r) for r in dl]
-
-
-def test_delta_candidates_driver_path(spark, delta_dir):
-    """The driver-side pyarrow candidate read must decode gaps too:
-    force the range-prune path and check MaxScore == DAAT on the delta
-    index."""
-    de = SearchEngine(spark, delta_dir)
-    de.PRUNE_MIN_POSTINGS = 0
-    try:
-        q = QUERIES4[0]
-        assert _res(de, q) == _res(de, q, algo="maxscore")
-    finally:
-        del de.PRUNE_MIN_POSTINGS
+    got = [
+        (r["rank"], r["doc_id"], r["score"])
+        for r in engine.search(q, k=10, algo="maxscore", local=False).collect()
+    ]
+    assert calls and calls[0] > 0
+    assert got == want

@@ -226,50 +226,3 @@ def test_jpeg_dimensions_eoi_and_truncation():
         jpeg_dimensions(payload[: sof + 6])
     # intact probe still fine
     assert jpeg_dimensions(payload) == (24, 24, 3)
-
-
-def test_streaming_compact_compressed_positions(spark, corpus, tmp_path):
-    """Streaming compaction under EngineConfig.compress_positions writes
-    the delta+VByte positional layout and answers phrase queries
-    identically to a raw-layout compaction of the SAME segments."""
-    from searchengine_spark.config import EngineConfig
-    from searchengine_spark.query.engine import SearchEngine
-    from searchengine_spark.streaming.incremental import StreamingIndexer
-
-    cfg = EngineConfig(
-        stopstem=True, skip_threshold=64, shuffle_partitions=8,
-        positions=True, compress_positions=True,
-    )
-    idx = str(tmp_path / "sidx_cp")
-    indexer = StreamingIndexer(spark, idx, cfg)
-    rows = corpus.limit(40).collect()
-    schema = corpus.schema
-    indexer.process_batch(spark.createDataFrame(rows[:20], schema), 0)
-    indexer.process_batch(spark.createDataFrame(rows[20:], schema), 1)
-    out_c = str(tmp_path / "cidx_cp")
-    indexer.compact(out_c)
-
-    pos = spark.read.parquet(f"{out_c}/positions")
-    assert "positions_vb" in pos.columns and "positions" not in pos.columns
-
-    # raw-layout compaction over the SAME ingested segments: results of
-    # every phrase must match exactly (both engine paths)
-    import dataclasses
-
-    indexer_raw = StreamingIndexer(
-        spark, idx, dataclasses.replace(cfg, compress_positions=False)
-    )
-    out_r = str(tmp_path / "cidx_raw")
-    indexer_raw.compact(out_r)
-    ec, er = SearchEngine(spark, out_c), SearchEngine(spark, out_r)
-    for phrase in ("merge column", "spark table", "zzznotaword"):
-        for local in (True, False):
-            want = [
-                r.asDict()
-                for r in er.phrase_search(phrase, k=10, local=local).collect()
-            ]
-            got = [
-                r.asDict()
-                for r in ec.phrase_search(phrase, k=10, local=local).collect()
-            ]
-            assert got == want, (phrase, local)

@@ -151,3 +151,68 @@ def test_sharded_batch_equals_single(single, sharded, mode):
 
     want = rows(single.batch_search(qs, k=10, mode=mode))
     assert rows(sharded.batch_search(qs, k=10, mode=mode)) == want
+
+
+TINY_DOCS = [
+    ("r", "a", "c1", "t", "alpha beta"),
+    ("r", "b", "c2", "t", "gamma delta"),
+    ("r", "c", "c3", "t", "alpha delta"),
+]
+
+
+@pytest.fixture(scope="module")
+def tiny_sharded(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("sharded_tiny") / "n2")
+    corpus = spark.createDataFrame(
+        TINY_DOCS,
+        "repo string, path string, commit string, lang string, content string",
+    )
+    build_sharded_index(spark, corpus, d, 2, TEST_CONFIG)
+    return ShardedSearchEngine(spark, d)
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_empty_result_keeps_docno_column(tiny_sharded, local):
+    """Both terms are indexed but no doc holds both: the conjunctive
+    result is empty, and with_docno still yields the docno column."""
+    res = tiny_sharded.search(
+        "beta gamma", k=10, mode="conjunctive", with_docno=True, local=local
+    )
+    assert res.columns == ["rank", "doc_id", "docno", "score"]
+    assert res.collect() == []
+
+
+BAD_ARGS = [
+    {"k": 0},
+    {"k": -1},
+    {"k": 2.5},
+    {"mode": "conj"},
+    {"scorer": "BM25"},
+    {"algo": "wand"},
+]
+
+
+@pytest.mark.parametrize("bad", BAD_ARGS, ids=lambda b: "-".join(map(str, *b.items())))
+def test_invalid_query_args_raise_on_every_route(single, tiny_sharded, bad):
+    """One check, one ValueError, on the local, distributed, batch and
+    sharded routes — never a silent fallback to another mode/scorer."""
+    kw = {"k": 10, **bad}
+    calls = [
+        lambda: single.search("spark table", local=True, **kw),
+        lambda: single.search("spark table", local=False, **kw),
+        lambda: single.batch_search([("q1", "spark table")], **kw),
+        lambda: tiny_sharded.search("alpha", local=True, **kw),
+        lambda: tiny_sharded.search("alpha", local=False, **kw),
+        lambda: tiny_sharded.batch_search([("q1", "alpha")], **kw),
+    ]
+    if set(bad) == {"k"}:
+        calls += [
+            lambda: single.phrase_search("spark table", k=kw["k"]),
+            lambda: tiny_sharded.phrase_search("alpha beta", k=kw["k"]),
+        ]
+    messages = set()
+    for call in calls:
+        with pytest.raises(ValueError) as err:
+            call()
+        messages.add(str(err.value))
+    assert len(messages) == 1, messages
