@@ -231,7 +231,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def term_postings(spark, sf):
         eng = _engine(spark, sf)
-        return eng._exploded_postings([PROBE_TERM]).select(
+        return eng.shards[0]._exploded_postings([PROBE_TERM]).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("tf").cast("long").alias("tf"),
         )

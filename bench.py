@@ -291,7 +291,7 @@ def main() -> None:
             per.append(time.time() - t0)
         warm1m.append(min(per))
     timings["query_bm25_1m_warm"] = round(statistics.median(warm1m), 3)
-    z1.postings.unpersist(blocking=False)  # release executor memory
+    z1.shards[0].postings.unpersist(blocking=False)  # release executor memory
 
     # amortized batch path: ONE job for the whole query set
     t0 = time.time()

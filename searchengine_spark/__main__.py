@@ -56,39 +56,18 @@ def cmd_build(args) -> None:
     print(json.dumps({s: v.get("duration_sec") for s, v in manifest["stages"].items()}))
 
 
-def _open_engine(spark, index_dir: str):
-    """SearchEngine or ShardedSearchEngine by what's on disk — a sharded
-    manifest makes `query`/`repl` scatter-gather transparently."""
-    import os
-
+def cmd_query(args) -> None:
     from .query.engine import SearchEngine
 
-    if os.path.exists(os.path.join(index_dir, "sharded_manifest.json")):
-        from .index.sharded import ShardedSearchEngine
-
-        return ShardedSearchEngine(spark, index_dir)
-    return SearchEngine(spark, index_dir)
-
-
-def cmd_query(args) -> None:
     spark = _spark(args.cpus)
-    engine = _open_engine(spark, args.index)
+    # a sharded index directory opens as N shards of the same engine
+    engine = SearchEngine(spark, args.index)
     if args.phrase:
         result = engine.phrase_search(args.text, k=args.k)
-        doct = (
-            engine.engines[0].doctable
-            if hasattr(engine, "engines")
-            else engine.doctable
-        )
-        if hasattr(engine, "engines"):
-            for e in engine.engines[1:]:
-                doct = doct.unionByName(e.doctable)
-        result = doct.select("doc_id", "docno").join(
+        result = engine.doctable.select("doc_id", "docno").join(
             result, "doc_id"
         ).select("rank", "doc_id", "docno", "score")
     else:
-        # SearchEngine and ShardedSearchEngine share this signature
-        # (sharded degrades maxscore to DAAT — identical results)
         result = engine.search(
             args.text,
             k=args.k,
@@ -178,15 +157,14 @@ def run_repl(engine, in_stream, out_stream) -> None:
 
 
 def cmd_repl(args) -> None:
+    from .query.engine import SearchEngine
+
     spark = _spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     # the reference loads its whole index into RAM before the prompt
     # loop (Main.java / Query.java:62-72); warm() is the distributed
     # analogue, so interactive latency matches that usage pattern.
-    # Sharded indexes are auto-detected (scatter-gather; no warm()).
-    engine = _open_engine(spark, args.index)
-    if hasattr(engine, "warm"):
-        engine = engine.warm()
+    engine = SearchEngine(spark, args.index).warm()
     run_repl(engine, sys.stdin, sys.stdout)
 
 
@@ -292,8 +270,8 @@ def main(argv=None) -> None:
     b.add_argument("--no-resume", action="store_true")
     b.add_argument("--shards", type=int, default=1,
                    help="build N self-contained shard indexes + manifest "
-                   "(index/sharded.py); query/repl auto-detect and "
-                   "scatter-gather")
+                   "(index/sharded.py); query/repl/batch open it as "
+                   "N shards")
     b.add_argument("--cpus", type=int)
     b.set_defaults(fn=cmd_build)
 

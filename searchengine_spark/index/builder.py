@@ -59,7 +59,6 @@ Skew handling at 1e12-file scale:
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 from contextlib import contextmanager

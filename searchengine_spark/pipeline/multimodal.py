@@ -332,7 +332,10 @@ def mp4_metadata(payload: bytes) -> dict:
     }
     mvhd = _mp4_find(payload, moov[0], moov[1], b"mvhd")
     if mvhd is not None:
-        b, _e = mvhd
+        b, e = mvhd
+        # fixed fields up to duration: 20 bytes (v0), 32 bytes (v1)
+        if e - b < 20 or (payload[b] == 1 and e - b < 32):
+            raise ValueError("truncated MP4: mvhd shorter than its fields")
         version = payload[b]
         if version == 1:
             timescale, duration = struct.unpack(
@@ -350,6 +353,9 @@ def mp4_metadata(payload: bytes) -> dict:
         tkhd = _mp4_find(payload, b, e, b"tkhd")
         if tkhd is not None:
             tb, te = tkhd
+            # the full box: 84 bytes (v0), 96 bytes (v1)
+            if te - tb < 84 or (payload[tb] == 1 and te - tb < 96):
+                raise ValueError("truncated MP4: tkhd shorter than its fields")
             # width/height are the LAST two 16.16 fields of tkhd
             w16, h16 = struct.unpack(">II", payload[te - 8 : te])
             if w16 and h16 and out["width"] is None:

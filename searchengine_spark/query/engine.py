@@ -39,14 +39,24 @@ The reference's three algorithms (query/ directory) and their Spark forms:
 
 Tie-break everywhere: score DESC, doc_id ASC (ResultBlock.java:41-52).
 Missing query terms are silently dropped (Query.java:134-136).
+
+Shards: :class:`IndexShard` holds what one index directory owns (its
+readers, memo caches and the per-index executors above, which take
+the term stats they score with as an argument). :class:`SearchEngine`
+is the API over a list of shards. A plain index directory opens as one
+shard; a directory holding ``sharded_manifest.json`` (written by
+``index/sharded.py``) opens as N. Every query method is written once:
+tokenize, sum the term stats over the shards, gate the route, fan out,
+merge the per-shard top-k on (key desc, doc_id asc), rank. With one
+shard the merge passes the shard's own result through untouched.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import numbers
 import os
+from functools import reduce
 from typing import Optional, Sequence
 
 import pandas as pd
@@ -56,19 +66,26 @@ from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.scoring import bm25_partial_expr, tfidf_partial_expr
-from ..functions.text import tokenize_query_py
+from ..functions.text import tokenize_doc_py, tokenize_query_py
 from ..index.builder import THETA_TOPK, term_bucket_py
 
 MODES = ("disjunctive", "conjunctive")
 SCORERS = ("bm25", "tfidf")
 ALGOS = ("daat", "maxscore")
 
+# a sharded index's top-level file: shard dirs + exact global stats
+MANIFEST = "sharded_manifest.json"
+
+TOPK_SCHEMA = "rank int, doc_id long, score double"
+PHRASE_SCHEMA = "rank int, doc_id long, score double, phrase_tf int"
+BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
+
 
 def validate_query_args(
     k, mode: str = "disjunctive", scorer: str = "bm25", algo: str = "daat"
 ) -> None:
-    """The one argument check of every query entry point (single and
-    sharded; search, batch_search, phrase_search): every route rejects
+    """The one argument check of every query entry point (search,
+    batch_search, phrase_search): every route rejects
     the same invalid input with the same ValueError instead of quietly
     scoring something else (``scorer="BM25"`` used to score TFIDF,
     ``mode="conj"`` ran disjunctive, and ``k=-1`` returned every match
@@ -86,8 +103,21 @@ def validate_query_args(
         raise ValueError(f"k must be a positive integer, got {k!r}")
 
 
-class SearchEngine:
-    """Loads an index built by :class:`IndexBuilder` and answers queries.
+def spark_log10(spark: SparkSession, x: float) -> float:
+    """``log10(x)`` with the bits Spark's ``F.log10`` gives:
+    ``java.lang.StrictMath.log10`` (fdlibm). Python's ``math.log10``
+    disagrees with it in the last bit for some arguments (904 of
+    df = 1..20,000 at n_docs = 20,001), so an idf computed on the driver
+    goes through the JVM to match an idf computed in a plan."""
+    return spark._jvm.java.lang.StrictMath.log10(float(x))
+
+
+class IndexShard:
+    """What one index directory built by :class:`IndexBuilder` owns: its
+    lexicon/postings/positions/doctable readers, their memo caches, and
+    the executors of every query plan over them. Executors take the
+    term stats (df, idf, upper bounds) they score with, so a shard of a
+    sharded index scores with the global idf its engine injects.
 
     Unlike the reference — which loads the FULL lexicon and doc table into
     RAM before the first query (Query.java:62-72) — only the query's own
@@ -95,12 +125,19 @@ class SearchEngine:
     postings stay distributed.
     """
 
-    def __init__(self, spark: SparkSession, index_dir: str):
+    def __init__(
+        self,
+        spark: SparkSession,
+        index_dir: str,
+        global_stats: Optional[dict] = None,
+    ):
         self.spark = spark
         self.index_dir = index_dir.rstrip("/")
         self.config = EngineConfig.load(self.index_dir)
         with open(os.path.join(self.index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+            # a shard of a sharded index scores with the collection's
+            # n_docs/avgdl: every scoring expression reads self.stats
+            self.stats = {**json.load(f), **(global_stats or {})}
         self._lex_cache: dict[str, Optional[dict]] = {}
         self._block_max_cache: dict[str, list[dict]] = {}
         self._block_summary_cache: dict[str, Optional[dict]] = {}
@@ -112,40 +149,10 @@ class SearchEngine:
         self._pa_postings = None
         self._pa_lexicon = None
         self._pa_positions = None
-        # None = auto (engage when the query's postings fit the driver
-        # gate); True/False force. search(local=...) overrides per call.
-        self.local_exec: Optional[bool] = None
         self.postings = spark.read.parquet(os.path.join(self.index_dir, "postings"))
         self.doctable = spark.read.parquet(os.path.join(self.index_dir, "doctable"))
 
-    def refresh(self) -> None:
-        """Invalidate the per-term memo caches and re-read the index
-        frames. Call after the index directory is updated IN PLACE (e.g.
-        streaming compaction into the same dir) — without this, negative
-        lexicon lookups memoized before the update would keep treating
-        newly indexed terms as absent."""
-        self._lex_cache.clear()
-        self._block_max_cache.clear()
-        self._block_summary_cache.clear()
-        self._block_summary_full = False
-        self._block_summary_should_load = None
-        self._retire_phrase_cache(None)
-        self._lexicon_df = None
-        self._positions_df = None
-        self._pa_postings = None
-        self._pa_lexicon = None
-        self._pa_positions = None
-        with open(os.path.join(self.index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
-        self.config = EngineConfig.load(self.index_dir)
-        self.postings = self.spark.read.parquet(
-            os.path.join(self.index_dir, "postings")
-        )
-        self.doctable = self.spark.read.parquet(
-            os.path.join(self.index_dir, "doctable")
-        )
-
-    def warm(self) -> "SearchEngine":
+    def warm(self) -> None:
         """Pin the postings frame in executor memory and materialize it —
         the distributed analogue of the reference loading its whole index
         into RAM before the first query (Query.java:62-72; its 16-72 ms
@@ -164,7 +171,6 @@ class SearchEngine:
         # pull the block_summary into driver RAM too (when small enough)
         # so the first MaxScore query pays no metadata read
         self._block_summary([])
-        return self
 
     @property
     def lexicon(self) -> DataFrame:
@@ -218,9 +224,6 @@ class SearchEngine:
                 partitioning="hive",
             )
         return self._pa_lexicon
-
-    def tokenize_query(self, text: str) -> list[str]:
-        return tokenize_query_py(text, self.config)
 
     def _bucket_filter(self, terms: Sequence[str]):
         buckets = sorted({term_bucket_py(t, self.config.n_term_buckets) for t in terms})
@@ -601,79 +604,7 @@ class SearchEngine:
             "rank", "doc_id", "score"
         )
 
-    # ---------- public API ----------
-
-    def search(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "disjunctive",
-        scorer: str = "bm25",
-        algo: str = "daat",
-        with_docno: bool = False,
-        local: Optional[bool] = None,
-    ) -> DataFrame:
-        """Top-k for a raw query string. Returns (rank, doc_id, score
-        [, docno]). k in {10, 20, 100} in the reference UI (Main.java:58);
-        any positive k accepted here.
-
-        ``local`` selects the execution path: None (default) auto-gates —
-        when the query terms' postings fit the driver RAM gate
-        (LOCAL_EXEC_MAX_POSTINGS), score entirely driver-side in numpy
-        with NO Spark job (the analogue of the reference's RAM-resident
-        interactive query path, Query.java:62-72); beyond the gate, or
-        with local=False, the distributed plan runs. Results are
-        bit-identical either way (same formulas, same summation order,
-        same tie-break)."""
-        validate_query_args(k, mode, scorer, algo)
-        terms = self.tokenize_query(query)
-        stats = self._term_stats(terms)
-        terms = [t for t in terms if t in stats]  # drop unknown terms (J5)
-        if not terms:
-            result = self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        elif self._local_ok(terms, stats, local):
-            result = self._local_df(
-                self._local_topk(terms, stats, scorer, mode, algo, k)
-            )
-        elif mode == "conjunctive":
-            result = self._conjunctive(terms, stats, scorer, k)
-        elif algo == "maxscore":
-            result = self._maxscore(terms, stats, scorer, k)
-        else:
-            result = self._daat(terms, stats, scorer, k)
-        if with_docno:
-            # broadcast the k-row RESULT and stream the doctable past it
-            result = self.doctable.select("doc_id", "docno").join(
-                F.broadcast(result), "doc_id"
-            ).select("rank", "doc_id", "docno", "score")
-        return result
-
     # ---------- driver-local fast path (interactive latency) ----------
-
-    # auto-engage the driver-local path when the query terms' total df
-    # is at most this many postings: ~16 B/posting decoded (int64 id +
-    # doubles) keeps the transient driver footprint tens of MB. The
-    # reference answers every interactive query from RAM (Query.java:
-    # 62-72; Documentation.pdf Table 3's 16-72 ms are RAM-probe
-    # numbers); this is the same trade with an explicit gate — at
-    # web scale a stopword-laden query overflows the gate and falls
-    # back to the distributed plan, which is the only one that can
-    # answer it anyway.
-    LOCAL_EXEC_MAX_POSTINGS = 2_000_000
-
-    def _local_ok(self, terms, stats, override: Optional[bool]) -> bool:
-        if override is False:
-            return False
-        if override is None and self.local_exec is False:
-            return False
-        if override or self.local_exec:
-            return True
-        return (
-            sum(stats[t]["df"] for t in terms)
-            <= self.LOCAL_EXEC_MAX_POSTINGS
-        )
 
     def _local_postings(
         self,
@@ -752,26 +683,6 @@ class SearchEngine:
             for t, v in out.items()
         }
 
-    def _local_df(self, pdf: pd.DataFrame) -> DataFrame:
-        """Wrap a driver-computed top-k as a LocalRelation via a SQL
-        VALUES clause: collect() is then driver-only — NO Spark job at
-        all (createDataFrame(pandas) builds an ExistingRDD whose collect
-        costs a full Python-worker round-trip, measured ~0.26 s even for
-        k rows). Doubles ride as CAST('<repr>' AS DOUBLE): repr
-        round-trips IEEE754 exactly and parseDouble is correctly
-        rounded, so the scores are bit-identical to the numpy values."""
-        if len(pdf) == 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        rows = ",".join(
-            f"({int(rank)}, {int(doc_id)}L, CAST('{float(score)!r}' AS DOUBLE))"
-            for rank, doc_id, score in pdf.itertuples(index=False)
-        )
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {rows} AS t(rank, doc_id, score)"
-        )
-
     def _local_topk(
         self, terms, stats, scorer: str, mode: str, algo: str, k: int
     ) -> pd.DataFrame:
@@ -838,32 +749,17 @@ class SearchEngine:
             }
         )
 
-    def _phrase_local_ok(
-        self, terms, stats, override: Optional[bool]
-    ) -> bool:
-        """Gate for the driver-local phrase path: total cf (one position
-        int per term occurrence) under the same RAM bound as
-        _local_ok's df sum."""
-        if override is False:
-            return False
-        if override is None and self.local_exec is False:
-            return False
-        if override or self.local_exec:
-            return True
-        return (
-            sum(stats[t]["cf"] for t in set(terms))
-            <= self.LOCAL_EXEC_MAX_POSTINGS
-        )
-
-    def _local_phrase(self, terms, k: int, raw: bool = False):
+    def _local_phrase(self, terms, k: int) -> tuple[pd.DataFrame, int]:
         """Driver-side phrase top-k — bit-identical to the distributed
         phrase plan: identical coverage semantics (a base b matches when
         every phrase index i has term_i at position b+i), identical
-        scoring double-ops (bm25_partial_py mirrors bm25_partial_expr;
-        score = partial * log10(n_docs / phrase_df) in the same operand
-        order) and identical (partial desc, doc_id asc) ranking — idf is
-        a positive per-query constant, so ranking by the idf-free
-        partial is rank- and tie-identical, as in the distributed path.
+        scoring double-ops (bm25_partial_py mirrors bm25_partial_expr)
+        and identical (partial desc, doc_id asc) ranking — idf is a
+        positive per-query constant, so ranking by the idf-free partial
+        is rank- and tie-identical, as in the distributed path. Returns
+        the idf-free top-k (doc_id, partial, phrase_tf) and the number
+        of matching docs; the engine attaches the idf of the phrase's
+        collection-wide df.
 
         The positional slices arrive via one column-projected,
         bucket+term-pushed pyarrow read (no Spark job); coverage is an
@@ -888,21 +784,10 @@ class SearchEngine:
         ).combine_chunks()
 
         def empty():
-            if raw:
-                return (
-                    pd.DataFrame(
-                        {"doc_id": [], "partial": [], "phrase_tf": []}
-                    ).astype(
-                        {
-                            "doc_id": "int64",
-                            "partial": "float64",
-                            "phrase_tf": "int64",
-                        }
-                    ),
-                    0,
-                )
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double, phrase_tf int"
+            return (
+                pd.DataFrame({"doc_id": [], "partial": [], "phrase_tf": []})
+                .astype({"doc_id": "int64", "partial": "float64", "phrase_tf": "int64"}),
+                0,
             )
 
         if tbl.num_rows == 0:
@@ -954,30 +839,15 @@ class SearchEngine:
         )
         hit_docs = docs_unique[hit_idx]
         order = np.lexsort((hit_docs, -partial))[:k]
-        if raw:
-            # scatter-gather consumers (index/sharded.py) rank globally
-            # on the idf-free partial and attach the GLOBAL phrase_df
-            return (
-                pd.DataFrame(
-                    {
-                        "doc_id": hit_docs[order],
-                        "partial": partial[order],
-                        "phrase_tf": ptf[order].astype(np.int64),
-                    }
-                ),
-                int(phrase_df),
-            )
-        idf = math.log10(float(self.stats["n_docs"]) / phrase_df)
-        score = partial[order] * idf
-        rows = ",".join(
-            f"({r + 1}, {int(d)}L, CAST('{float(s)!r}' AS DOUBLE), {int(tf)})"
-            for r, (d, s, tf) in enumerate(
-                zip(hit_docs[order], score, ptf[order])
-            )
-        )
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {rows} "
-            "AS t(rank, doc_id, score, phrase_tf)"
+        return (
+            pd.DataFrame(
+                {
+                    "doc_id": hit_docs[order],
+                    "partial": partial[order],
+                    "phrase_tf": ptf[order].astype(np.int64),
+                }
+            ),
+            int(phrase_df),
         )
 
     # ---------- algorithms ----------
@@ -996,6 +866,14 @@ class SearchEngine:
             .drop("n_terms")
         )
         return self._topk(per_doc, k)
+
+    def _plan(self, terms, stats, scorer: str, mode: str, algo: str, k: int):
+        """The distributed top-k plan a query runs on this shard."""
+        if mode == "conjunctive":
+            return self._conjunctive(terms, stats, scorer, k)
+        if algo == "maxscore":
+            return self._maxscore(terms, stats, scorer, k)
+        return self._daat(terms, stats, scorer, k)
 
     # candidate sides whose essential dfs sum below this are broadcast in
     # the semi join (doc_ids only: ~8 B/row -> <= ~16 MB broadcast)
@@ -1199,27 +1077,12 @@ class SearchEngine:
             df.unpersist(blocking=False)
         self._phrase_caches = [new] if new is not None else []
 
-    def tokenize_phrase(self, phrase: str) -> list[str]:
-        """Phrase tokenization = the DOCUMENT pipeline (order-preserving,
-        duplicates kept — a phrase is a token sequence, not a term set),
-        truncated to term_dim like every indexed term."""
-        from ..functions.text import tokenize_doc_py
-
-        return [
-            t[: self.config.term_dim]
-            for t in tokenize_doc_py(phrase, self.config)
-        ]
-
-    def phrase_search(
-        self,
-        phrase: str,
-        k: int = 10,
-        local: Optional[bool] = None,
-        _raw: bool = False,
-    ):
-        """Exact phrase top-k over the positional index (requires a build
-        with ``positions=True``). A phrase occurrence is a run of the
-        phrase's terms at consecutive positions of the POST-pipeline
+    def _phrase_plan(self, terms, k: int) -> tuple[DataFrame, DataFrame]:
+        """Exact phrase top-k over this shard's positional index: the
+        idf-free top-k (doc_id, _partial, phrase_tf) and the 1-row count
+        of matching docs (phrase_df). The engine attaches the idf of
+        the phrase's collection-wide df. A phrase occurrence is a run of
+        the phrase's terms at consecutive positions of the POST-pipeline
         token sequence (stopwords removed, stems applied) — the standard
         semantics for a stopped/stemmed index.
 
@@ -1245,45 +1108,14 @@ class SearchEngine:
         idf from the phrase's doc frequency, the usual Q-1/Q-4 quirks
         preserved; ranking happens on the idf-free partial (idf is a
         positive per-query constant) so only the k winners touch the df
-        scalar. Strict semantics: a phrase with any unindexed term
-        matches nothing (unlike the disjunctive paths'
-        drop-unknown-terms rule — dropping a phrase word would silently
-        change the phrase)."""
-        validate_query_args(k)
-        pos_dir = os.path.join(self.index_dir, "positions")
-        if not os.path.exists(pos_dir):
-            raise RuntimeError(
-                "no positional index: build with EngineConfig(positions=True)"
-            )
-        terms = self.tokenize_phrase(phrase)
-
-        def empty() -> DataFrame:
-            # phrase_tf is int in BOTH the empty and populated paths
-            # (the scored path casts to int below) so callers can
-            # union/compare schemas regardless of whether the phrase
-            # matched. Built lazily — the hot path never pays the
-            # schema-parse/py4j cost of a frame it discards.
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double, phrase_tf int"
-            )
-
-        if not terms:
-            return empty()
-        stats = self._term_stats(terms)
-        if any(t not in stats for t in terms):
-            return empty()  # strict: unknown word => phrase cannot occur
-
-        # driver-local fast path (same design + gate as _local_topk):
-        # the phrase terms' positional slices are gated on total cf —
-        # one position int per occurrence is the dominant footprint
-        if self._phrase_local_ok(terms, stats, local):
-            return self._local_phrase(terms, k, raw=_raw)
-
+        scalar."""
         # resolve the positions frame ONCE per engine (directory listing
         # + schema read are driver-side costs a per-query re-read would
         # pay every time, like postings/doctable in __init__)
         if self._positions_df is None:
-            self._positions_df = self.spark.read.parquet(pos_dir)
+            self._positions_df = self.spark.read.parquet(
+                os.path.join(self.index_dir, "positions")
+            )
         # bucket prune (partition-level) + term IN-list (pushed to the
         # parquet scan — positions files are term-sorted within each
         # bucket, so row-group min/max stats skip everything else; the
@@ -1367,10 +1199,10 @@ class SearchEngine:
         # constant (phrase_df <= true_docs < n_docs under Q-1
         # inflation), so ranking by the idf-free partial is
         # rank-identical — ties included: equal partial <=> equal final
-        # score. Top-k FIRST, then attach phrase_df (a 1-row count
-        # aggregate broadcast-cross-joined — an unbounded
+        # score. Top-k FIRST; the engine then attaches phrase_df (a
+        # 1-row count aggregate broadcast-cross-joined — an unbounded
         # Window.partitionBy() would funnel every matching doc through
-        # one task) and scale only the k winners. Same bits as scaling
+        # one task) and scales only the k winners. Same bits as scaling
         # pre-top-k: one double multiply, same operand order.
         # doc_len rides in the positions rows: no doctable join — the
         # whole query is scan -> two aggs -> topk
@@ -1382,43 +1214,23 @@ class SearchEngine:
         phrase_df_row = ptf.agg(
             F.count("*").cast("long").alias("phrase_df")
         )
-        if _raw:
-            # scatter-gather: (doc_id, _partial, phrase_tf) top-k + the
-            # 1-row matched-doc count; the caller attaches a GLOBAL idf
-            return topk, phrase_df_row
-        topk = topk.crossJoin(F.broadcast(phrase_df_row))
-        idf = F.log10(F.lit(float(self.stats["n_docs"])) / F.col("phrase_df"))
-        topk = topk.select(
-            "doc_id", (F.col("_partial") * idf).alias("score"), "phrase_tf"
-        )
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score", "phrase_tf"
-        )
+        return topk, phrase_df_row
 
     # ---------- batch (TestPerformance.java analogue) ----------
 
-    def batch_search(
-        self,
-        queries: Sequence[tuple[str, str]],
-        k: int = 10,
-        mode: str = "disjunctive",
-        scorer: str = "bm25",
-        algo: str = "daat",
-        term_stats: Optional[dict] = None,
+    def _batch_plan(
+        self, known, stats, scorer: str, mode: str, algo: str, k: int
     ) -> DataFrame:
-        """Run (query_id, text) pairs as ONE Spark job; returns a
-        TREC-run-shaped DataFrame (query_id, rank, doc_id, score) — S10's
-        run-file sink is then just a .write.csv of this.
-
-        The reference evaluates its query set serially
-        (TestPerformance.java:58-147); a naive Spark translation (one
-        search() plan per query unioned) is a driver bottleneck at 10k
-        queries. Instead the whole set becomes data: a broadcast
-        (query_id, term, idf) table joined against ONE bucket-pruned
-        postings scan of the union of query terms, then
+        """ONE Spark job for a whole query set over this shard: a
+        broadcast (query_id, term, idf) table joined against ONE
+        bucket-pruned postings scan of the union of query terms, then
         ``groupBy(query_id, doc_id)`` and a per-query window top-k —
         plan size and job count are constant in the number of queries.
+        ``known`` holds each query's (query_id, sorted known terms) and
+        ``stats`` their df/idf. A term the stats know but this shard's
+        lexicon does not simply matches no postings here, and n_q_terms
+        stays the query's known-term count, so the conjunctive filter
+        is exact on every shard.
 
         Scores are bit-identical to the single-query path: the per-doc
         sum folds addends in sorted-term order (array_sort on the tiny
@@ -1429,28 +1241,11 @@ class SearchEngine:
         ``algo='maxscore'`` applies each query's metadata-derived theta
         (see _theta_from_blocks) as an exact score pre-filter; results
         are identical to DAAT by construction either way."""
-        validate_query_args(k, mode, scorer, algo)
-        tokenized = [(qid, self.tokenize_query(text)) for qid, text in queries]
-        all_terms = sorted({t for _, ts in tokenized for t in ts})
-        # ``term_stats`` lets a scatter-gather caller (index/sharded.py)
-        # inject GLOBAL df/idf and the GLOBAL known-term sets: terms the
-        # dict knows but this shard's lexicon doesn't simply match no
-        # postings, and n_q_terms stays the global count so the
-        # conjunctive filter is exact per shard
-        stats = (
-            term_stats
-            if term_stats is not None
-            else self._term_stats(all_terms)  # ONE lexicon probe
-        )
-        rows = []
-        for qid, ts in tokenized:
-            known = sorted({t for t in ts if t in stats})
-            for t in known:
-                rows.append((qid, t, float(stats[t]["idf"]), len(known)))
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
-            )
+        rows = [
+            (qid, t, float(stats[t]["idf"]), len(ts))
+            for qid, ts in known
+            for t in ts
+        ]
         qterms = self.spark.createDataFrame(
             rows, "query_id string, term string, idf double, n_q_terms int"
         )
@@ -1487,7 +1282,7 @@ class SearchEngine:
         if (
             algo == "maxscore"
             and mode != "conjunctive"
-            and len(all_terms) <= self.MAX_TERM_PREDICATE
+            and len(union_terms) <= self.MAX_TERM_PREDICATE
         ):
             # per-query theta pre-filters (bounded driver reads via the
             # block_summary stage; huge query sets still skip them — the
@@ -1498,10 +1293,8 @@ class SearchEngine:
             # drop valid rows — matching search()'s dispatch, which
             # routes conjunctive queries past MaxScore entirely.
             thetas = {
-                qid: self._theta_from_blocks(
-                    [t for t in ts if t in stats], scorer, k
-                )
-                for qid, ts in tokenized
+                qid: self._theta_from_blocks(ts, scorer, k)
+                for qid, ts in known
             }
             if any(v > 0.0 for v in thetas.values()):
                 theta_map = F.create_map(
@@ -1521,3 +1314,369 @@ class SearchEngine:
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score")
         )
+
+
+class SearchEngine:
+    """Answers queries over an index directory: one shard for a plain
+    index, N for a directory holding ``sharded_manifest.json``.
+
+    Each query method is written once over ``shards``. The engine sums
+    the query terms' df/cf over the shards, gates the route on that sum,
+    fans out to the shards that can contribute, and merges their top-k
+    on (key desc, doc_id asc). Per-shard k suffices for global k:
+    shards partition the doc_id space, so each member of the global
+    top-k ranks within its own shard's top-k under the same total
+    order. Scores keep their bits: a shard of a sharded index scores
+    with the collection's avgdl/n_docs and the idf of the summed df,
+    and every per-doc sum folds its addends in sorted-term order.
+    With one shard the merge passes the shard's result through."""
+
+    # auto-engage the driver-local path when the query terms' total df
+    # is at most this many postings: ~16 B/posting decoded (int64 id +
+    # doubles) keeps the transient driver footprint tens of MB. The
+    # reference answers every interactive query from RAM (Query.java:
+    # 62-72; Documentation.pdf Table 3's 16-72 ms are RAM-probe
+    # numbers); this is the same trade with an explicit gate — at
+    # web scale a stopword-laden query overflows the gate and falls
+    # back to the distributed plan, which is the only one that can
+    # answer it anyway. Phrase queries gate their total cf (one
+    # position int per term occurrence) under the same bound.
+    LOCAL_EXEC_MAX_POSTINGS = 2_000_000
+
+    def __init__(self, spark: SparkSession, index_dir: str):
+        self.spark = spark
+        self.index_dir = index_dir.rstrip("/")
+        # None = auto (engage when the query's postings fit the driver
+        # gate); True/False force. search(local=...) overrides per call.
+        self.local_exec: Optional[bool] = None
+        self._open()
+
+    def _open(self) -> None:
+        manifest = os.path.join(self.index_dir, MANIFEST)
+        if os.path.exists(manifest):
+            with open(manifest) as f:
+                m = json.load(f)
+            dirs = [os.path.join(self.index_dir, d) for d in m["shard_dirs"]]
+            global_stats = m["stats"]
+        else:
+            dirs, global_stats = [self.index_dir], None
+        self.shards = [IndexShard(self.spark, d, global_stats) for d in dirs]
+        self.config = self.shards[0].config
+        self.stats = self.shards[0].stats
+        self.doctable = reduce(
+            DataFrame.unionByName, [s.doctable for s in self.shards]
+        )
+        self._idf_by_df: dict[int, float] = {}
+
+    def refresh(self) -> None:
+        """Re-open the index: drop the per-term memo caches and re-read
+        the index frames. Call after the index directory is updated IN
+        PLACE (e.g. streaming compaction into the same dir) — without
+        this, negative lexicon lookups memoized before the update would
+        keep treating newly indexed terms as absent."""
+        for shard in self.shards:
+            shard._retire_phrase_cache(None)
+        self._open()
+
+    def warm(self) -> "SearchEngine":
+        """Pin every shard's postings in executor memory
+        (IndexShard.warm)."""
+        for shard in self.shards:
+            shard.warm()
+        return self
+
+    @property
+    def lexicon(self) -> DataFrame:
+        """Full lexicon as a DataFrame (analytics over the dictionary).
+        A sharded index has one lexicon per shard, with shard-local df
+        and idf: read those as ``shards[i].lexicon``."""
+        if len(self.shards) > 1:
+            raise ValueError(
+                "a sharded index has one lexicon per shard: use shards[i].lexicon"
+            )
+        return self.shards[0].lexicon
+
+    def tokenize_query(self, text: str) -> list[str]:
+        return tokenize_query_py(text, self.config)
+
+    def tokenize_phrase(self, phrase: str) -> list[str]:
+        """Phrase tokenization = the DOCUMENT pipeline (order-preserving,
+        duplicates kept — a phrase is a token sequence, not a term set),
+        truncated to term_dim like every indexed term."""
+        return [
+            t[: self.config.term_dim]
+            for t in tokenize_doc_py(phrase, self.config)
+        ]
+
+    # ---------- fan-out plumbing ----------
+
+    def _probe(self, terms: Sequence[str]) -> tuple[dict, list[dict]]:
+        """(collection-wide stats of the known terms, each shard's
+        lexicon rows). One shard's rows are its lexicon's own, stored
+        idf included; over N shards df and cf are exact integer sums
+        and idf is recomputed from the summed df. Driver-side pyarrow
+        lexicon probes only — no Spark job."""
+        per_shard = [s._term_stats(terms) for s in self.shards]
+        if len(per_shard) == 1:
+            return per_shard[0], per_shard
+        stats = {}
+        for t in dict.fromkeys(terms):
+            rows = [p[t] for p in per_shard if t in p]
+            if rows:
+                df = sum(r["df"] for r in rows)
+                stats[t] = {
+                    "df": df,
+                    "cf": sum(r["cf"] for r in rows),
+                    "idf": self._idf(df),
+                }
+        return stats, per_shard
+
+    def _idf(self, df: int) -> float:
+        """log10(n_docs / df) with Spark's bits (spark_log10), memoized
+        by df until refresh()."""
+        idf = self._idf_by_df.get(df)
+        if idf is None:
+            idf = spark_log10(self.spark, float(self.stats["n_docs"]) / df)
+            self._idf_by_df[df] = idf
+        return idf
+
+    def _fan_out(self, terms, stats, per_shard, complete: bool) -> list:
+        """(shard, its terms, their stats under the collection idf) for
+        every shard whose lexicon holds any of ``terms`` — all of them
+        when ``complete``: a conjunction or phrase needs every term in
+        one doc, and a doc lives wholly in one shard."""
+        work = []
+        for shard, rows in zip(self.shards, per_shard):
+            ts = [t for t in terms if t in rows]
+            if ts and (not complete or len(ts) == len(terms)):
+                sub = {t: {**rows[t], "idf": stats[t]["idf"]} for t in ts}
+                work.append((shard, ts, sub))
+        return work
+
+    def _local_ok(
+        self, terms, stats, override: Optional[bool], key: str = "df"
+    ) -> bool:
+        """The route gate: the driver-local path when forced, or when
+        the query terms' summed ``key`` (df for search, cf for phrase)
+        fits LOCAL_EXEC_MAX_POSTINGS."""
+        if override is False:
+            return False
+        if override is None and self.local_exec is False:
+            return False
+        if override or self.local_exec:
+            return True
+        return (
+            sum(stats[t][key] for t in set(terms))
+            <= self.LOCAL_EXEC_MAX_POSTINGS
+        )
+
+    def _local_df(
+        self, schema: str, pdf: Optional[pd.DataFrame] = None
+    ) -> DataFrame:
+        """A driver-computed result (no rows when ``pdf`` is None or
+        empty) as a LocalRelation via a SQL VALUES clause: collect() is
+        then driver-only — NO Spark job at all (createDataFrame(pandas)
+        builds an ExistingRDD whose collect costs a full Python-worker
+        round-trip, measured ~0.26 s even for k rows). Doubles ride as
+        CAST('<repr>' AS DOUBLE): repr round-trips IEEE754 exactly and
+        parseDouble is correctly rounded, so the scores are
+        bit-identical to the numpy values."""
+        if pdf is None or len(pdf) == 0:
+            return self.spark.createDataFrame([], schema)
+        names, types = zip(*(c.split() for c in schema.split(", ")))
+        literal = {"int": "{:d}", "long": "{:d}L", "double": "CAST('{!r}' AS DOUBLE)"}
+        row = "(" + ", ".join(literal[t] for t in types) + ")"
+        rows = ",".join(
+            row.format(*r) for r in zip(*(pdf[n].tolist() for n in names))
+        )
+        return self.spark.sql(
+            f"SELECT * FROM VALUES {rows} AS t({', '.join(names)})"
+        )
+
+    @staticmethod
+    def _driver_merge(parts: list, key: str, k: int) -> pd.DataFrame:
+        """The k best rows of the per-shard top-k frames on (key desc,
+        doc_id asc), ranked; one shard's frame passes through."""
+        parts = [p for p in parts if len(p)] or parts[:1]
+        if len(parts) == 1:
+            return parts[0]
+        merged = (
+            pd.concat(parts, ignore_index=True)
+            .sort_values([key, "doc_id"], ascending=[False, True], kind="mergesort")
+            .head(k)
+        )
+        return merged.assign(rank=range(1, len(merged) + 1))
+
+    @staticmethod
+    def _spark_merge(
+        parts: list, key: str, k: int, by: Optional[str] = None
+    ) -> DataFrame:
+        """The k best rows (per ``by`` group) of the union of per-shard
+        top-k frames on (key desc, doc_id asc), ranked; one shard's
+        frame passes through. The per-shard subtrees are independent
+        branches of one Spark job."""
+        if len(parts) == 1:
+            return parts[0]
+        union = reduce(DataFrame.unionByName, parts)
+        order = (F.desc(key), F.asc("doc_id"))
+        if by is None:
+            union = union.orderBy(*order).limit(k)
+            w = Window.orderBy(*order)
+        else:
+            w = Window.partitionBy(by).orderBy(*order)
+        return union.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= k
+        )
+
+    # ---------- public API ----------
+
+    def search(
+        self,
+        query: str,
+        k: int = 10,
+        mode: str = "disjunctive",
+        scorer: str = "bm25",
+        algo: str = "daat",
+        with_docno: bool = False,
+        local: Optional[bool] = None,
+    ) -> DataFrame:
+        """Top-k for a raw query string. Returns (rank, doc_id, score
+        [, docno]). k in {10, 20, 100} in the reference UI (Main.java:58);
+        any positive k accepted here.
+
+        ``local`` selects the execution path: None (default) auto-gates —
+        when the query terms' postings fit the driver RAM gate
+        (LOCAL_EXEC_MAX_POSTINGS), score entirely driver-side in numpy
+        with NO Spark job (the analogue of the reference's RAM-resident
+        interactive query path, Query.java:62-72); beyond the gate, or
+        with local=False, the distributed plan runs. Results are
+        bit-identical either way (same formulas, same summation order,
+        same tie-break).
+
+        Over N > 1 shards ``algo='maxscore'`` runs DAAT (identical
+        results — MaxScore only prunes): the persisted per-block maxima
+        embed each shard's LOCAL idf, which is not an upper bound under
+        the collection idf."""
+        validate_query_args(k, mode, scorer, algo)
+        if len(self.shards) > 1:
+            algo = "daat"
+        terms = self.tokenize_query(query)
+        stats, per_shard = self._probe(terms)
+        terms = [t for t in terms if t in stats]  # drop unknown terms (J5)
+        work = self._fan_out(terms, stats, per_shard, mode == "conjunctive")
+        if not work:
+            result = self._local_df(TOPK_SCHEMA)
+        elif self._local_ok(terms, stats, local):
+            parts = [
+                shard._local_topk(ts, sub, scorer, mode, algo, k)
+                for shard, ts, sub in work
+            ]
+            result = self._local_df(
+                TOPK_SCHEMA, self._driver_merge(parts, "score", k)
+            )
+        else:
+            parts = [
+                shard._plan(ts, sub, scorer, mode, algo, k)
+                for shard, ts, sub in work
+            ]
+            result = self._spark_merge(parts, "score", k)
+        if with_docno:
+            # broadcast the k-row RESULT and stream the doctable past it
+            result = self.doctable.select("doc_id", "docno").join(
+                F.broadcast(result), "doc_id"
+            ).select("rank", "doc_id", "docno", "score")
+        return result
+
+    def phrase_search(
+        self, phrase: str, k: int = 10, local: Optional[bool] = None
+    ) -> DataFrame:
+        """Exact phrase top-k over the positional index (requires a build
+        with ``positions=True``); returns (rank, doc_id, score,
+        phrase_tf). Strict semantics: a phrase with any unindexed term
+        matches nothing (unlike the disjunctive paths'
+        drop-unknown-terms rule — dropping a phrase word would silently
+        change the phrase).
+
+        A matching doc lives wholly in one shard, so only shards whose
+        lexicon holds every phrase term take part. Shards rank on the
+        idf-free partial, a per-doc quantity, so the global top-k is
+        in the union of per-shard top-k; the phrase's df is the sum of
+        the shards' disjoint matched-doc counts, and its idf scales only
+        the k winners. The route gate sums the terms' cf."""
+        validate_query_args(k)
+        if not os.path.exists(os.path.join(self.shards[0].index_dir, "positions")):
+            raise RuntimeError(
+                "no positional index: build with EngineConfig(positions=True)"
+            )
+        terms = self.tokenize_phrase(phrase)
+        stats, per_shard = self._probe(terms)
+        work = self._fan_out(terms, stats, per_shard, complete=True)
+        if not work or any(t not in stats for t in terms):
+            return self._local_df(PHRASE_SCHEMA)
+
+        if self._local_ok(terms, stats, local, key="cf"):
+            parts, phrase_df = [], 0
+            for shard, _ts, _sub in work:
+                pdf, n = shard._local_phrase(terms, k)
+                parts.append(pdf)
+                phrase_df += n
+            if phrase_df == 0:
+                return self._local_df(PHRASE_SCHEMA)
+            top = self._driver_merge(parts, "partial", k)
+            top = top.assign(
+                rank=range(1, len(top) + 1),
+                score=top["partial"].to_numpy() * self._idf(phrase_df),
+            )
+            return self._local_df(PHRASE_SCHEMA, top)
+
+        plans = [shard._phrase_plan(terms, k) for shard, _ts, _sub in work]
+        topk = self._spark_merge([p[0] for p in plans], "_partial", k)
+        phrase_df = plans[0][1]
+        if len(plans) > 1:
+            phrase_df = reduce(
+                DataFrame.unionByName, [p[1] for p in plans]
+            ).agg(F.sum("phrase_df").cast("long").alias("phrase_df"))
+        idf = F.log10(F.lit(float(self.stats["n_docs"])) / F.col("phrase_df"))
+        scored = topk.crossJoin(F.broadcast(phrase_df)).select(
+            "doc_id", (F.col("_partial") * idf).alias("score"), "phrase_tf"
+        )
+        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+        return scored.withColumn("rank", F.row_number().over(w)).select(
+            "rank", "doc_id", "score", "phrase_tf"
+        )
+
+    def batch_search(
+        self,
+        queries: Sequence[tuple[str, str]],
+        k: int = 10,
+        mode: str = "disjunctive",
+        scorer: str = "bm25",
+        algo: str = "daat",
+    ) -> DataFrame:
+        """Run (query_id, text) pairs as ONE Spark job; returns a
+        TREC-run-shaped DataFrame (query_id, rank, doc_id, score) — S10's
+        run-file sink is then just a .write.csv of this.
+
+        The reference evaluates its query set serially
+        (TestPerformance.java:58-147); a naive Spark translation (one
+        search() plan per query unioned) is a driver bottleneck at 10k
+        queries. Instead the whole set becomes data
+        (IndexShard._batch_plan): ONE lexicon probe for the union of
+        query terms, one batch plan per shard, and a per-query re-rank
+        of the unioned per-shard top-k. ``algo='maxscore'`` runs DAAT
+        over N > 1 shards, as in search()."""
+        validate_query_args(k, mode, scorer, algo)
+        if len(self.shards) > 1:
+            algo = "daat"
+        tokenized = [(qid, self.tokenize_query(text)) for qid, text in queries]
+        stats, _ = self._probe(sorted({t for _, ts in tokenized for t in ts}))
+        known = [
+            (qid, sorted({t for t in ts if t in stats})) for qid, ts in tokenized
+        ]
+        if not any(ts for _, ts in known):
+            return self._local_df(BATCH_SCHEMA)
+        parts = [
+            shard._batch_plan(known, stats, scorer, mode, algo, k)
+            for shard in self.shards
+        ]
+        return self._spark_merge(parts, "score", k, by="query_id")

@@ -8,8 +8,6 @@ from searchengine_spark.config import EngineConfig
 from searchengine_spark.index.builder import build_index
 from searchengine_spark.query.engine import SearchEngine
 
-from .conftest import TEST_CONFIG
-
 QUERIES = [
     "spark table join fast",
     "window agg",
@@ -74,17 +72,17 @@ def test_block_max_pruning_is_active_and_safe(engine):
     union. Safety (rank-identity) is covered by test_daat_equals_maxscore;
     this pins that the pruning predicate actually fires."""
     terms = engine.tokenize_query("spark table join fast")
-    stats = engine._term_stats(terms)
+    stats = engine.shards[0]._term_stats(terms)
     terms = [t for t in terms if t in stats]
     assert len(terms) >= 2
     total_ub = sum(stats[t]["max_bm25"] for t in terms)
 
-    full = engine._candidates_block_max(
+    full = engine.shards[0]._candidates_block_max(
         terms, stats, "bm25", theta=0.0, total_ub=total_ub
     ).count()
     # theta just under the max possible score: only blocks whose max can
     # still reach it survive
-    tight = engine._candidates_block_max(
+    tight = engine.shards[0]._candidates_block_max(
         terms, stats, "bm25", theta=total_ub * 0.999, total_ub=total_ub
     ).count()
     assert full > 0

@@ -57,7 +57,7 @@ def test_auto_gate_engages_and_produces_local_plan(engine):
     """At fixture scale the auto gate must engage, and the returned
     frame must be a LocalRelation — collect() without a Spark job."""
     terms = engine.tokenize_query(QUERIES[0])
-    stats = engine._term_stats(terms)
+    stats = engine.shards[0]._term_stats(terms)
     assert engine._local_ok(terms, stats, None)
     plan = engine.search(QUERIES[0], k=10)._jdf.queryExecution() \
         .executedPlan().toString()

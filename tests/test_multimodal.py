@@ -263,6 +263,48 @@ def test_mp4_metadata_errors():
         MM.mp4_metadata(good[:sz])
 
 
+def _mp4_box(tag: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + tag + body
+
+
+_FTYP = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
+
+
+@pytest.mark.parametrize(
+    "moov_body",
+    [
+        _mp4_box(b"mvhd", b""),  # empty body at the payload's end
+        _mp4_box(b"mvhd", b"\x00" * 10),  # v0 cut before duration
+        _mp4_box(b"mvhd", b"\x01" + b"\x00" * 19),  # v1 cut before duration
+        _mp4_box(b"trak", _mp4_box(b"tkhd", b"\x00" * 4)),  # tkhd cut short
+        _mp4_box(b"trak", _mp4_box(b"tkhd", b"\x01" + b"\x00" * 83)),  # v1 cut
+    ],
+    ids=["mvhd-empty", "mvhd-v0-short", "mvhd-v1-short", "tkhd-short", "tkhd-v1-short"],
+)
+def test_mp4_metadata_truncated_box_raises_value_error(moov_body):
+    """A box whose declared size fits the payload but whose body is
+    shorter than its fixed fields raises ValueError, never a bare
+    struct.error / IndexError."""
+    with pytest.raises(ValueError, match="truncated MP4"):
+        MM.mp4_metadata(_FTYP + _mp4_box(b"moov", moov_body))
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        b"",
+        b"ID3\x03\x00\x00\x00\x00\x00\x7f",  # tag size runs past the end
+        b"\xff\xfb",  # frame header cut mid-way
+        b"\xff\xfb\x90",
+        b"\xff\xfb\x90\x00",  # lone header: no complete frame
+        MM.mp3_encode_minimal(n_frames=1, id3=True)[:-1],
+    ],
+)
+def test_mp3_metadata_truncated_payload_raises_value_error(payload):
+    with pytest.raises(ValueError):
+        MM.mp3_metadata(payload)
+
+
 @pytest.mark.parametrize("id3", [False, True])
 @pytest.mark.parametrize("channels", [1, 2])
 def test_mp3_metadata_roundtrip(id3, channels):

@@ -91,15 +91,15 @@ def test_phrase_bitmask_equals_count_distinct_fallback(phrase_engine):
         [r.asDict() for r in phrase_engine.phrase_search(p, k=10).collect()]
         for p in phrases
     ]
-    old = phrase_engine.PHRASE_BITMASK_MAX
-    phrase_engine.PHRASE_BITMASK_MAX = 0  # force count_distinct path
+    old = phrase_engine.shards[0].PHRASE_BITMASK_MAX
+    phrase_engine.shards[0].PHRASE_BITMASK_MAX = 0  # force count_distinct path
     try:
         got = [
             [r.asDict() for r in phrase_engine.phrase_search(p, k=10).collect()]
             for p in phrases
         ]
     finally:
-        phrase_engine.PHRASE_BITMASK_MAX = old
+        phrase_engine.shards[0].PHRASE_BITMASK_MAX = old
     assert got == want
 
 

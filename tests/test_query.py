@@ -143,9 +143,9 @@ def test_maxscore_theta_is_metadata_only_lower_bound(engine, oracle):
     (exactness of the MaxScore pre-filter) and be > 0 for a hot term."""
     q = "value table"
     terms = engine.tokenize_query(q)
-    stats = engine._term_stats(terms)
+    stats = engine.shards[0]._term_stats(terms)
     known = [t for t in terms if t in stats]
-    theta = engine._theta_from_blocks(known, "bm25", 10)
+    theta = engine.shards[0]._theta_from_blocks(known, "bm25", 10)
     want = oracle.search(q, k=10)
     assert len(want) == 10
     kth = want[-1][1]

@@ -39,11 +39,11 @@ def test_theta_from_summary_matches_posting_scores(engine):
     here brute-force from the exploded postings), and must DOMINATE the
     r2-era block-max bound (each block max is one posting's score)."""
     terms = engine.tokenize_query("spark table join fast value")
-    stats = engine._term_stats(terms)
+    stats = engine.shards[0]._term_stats(terms)
     terms = [t for t in terms if t in stats]
     for scorer in ("bm25", "tfidf"):
         scored = (
-            engine._scored(terms, stats, scorer)
+            engine.shards[0]._scored(terms, stats, scorer)
             .select("term", "score")
             .collect()
         )
@@ -52,14 +52,14 @@ def test_theta_from_summary_matches_posting_scores(engine):
             by_term.setdefault(r["term"], []).append(r["score"])
         bm_key = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
         for k in (10, 20, 100):
-            via_summary = engine._theta_from_blocks(terms, scorer, k)
+            via_summary = engine.shards[0]._theta_from_blocks(terms, scorer, k)
             brute = 0.0
             for t, scores in by_term.items():
                 if len(scores) >= k:
                     brute = max(brute, sorted(scores, reverse=True)[k - 1])
             assert via_summary == pytest.approx(brute, abs=1e-12), (scorer, k)
             legacy = 0.0
-            for t, blocks in engine._block_maxima(terms).items():
+            for t, blocks in engine.shards[0]._block_maxima(terms).items():
                 if len(blocks) >= k:
                     kth = sorted((b[bm_key] for b in blocks), reverse=True)[k - 1]
                     legacy = max(legacy, kth)
@@ -70,7 +70,7 @@ def test_theta_read_is_bounded(engine):
     """The summary probe returns at most THETA_TOPK scores per term no
     matter how long the posting list is."""
     terms = engine.tokenize_query("spark table join fast")
-    summary = engine._block_summary(terms)
+    summary = engine.shards[0]._block_summary(terms)
     assert summary, "block_summary stage missing from the test index"
     for t, row in summary.items():
         assert len(row["top_post_bm25"]) <= THETA_TOPK
@@ -88,7 +88,7 @@ def test_query_plan_has_no_doctable_join(engine):
 
 def test_exploded_postings_emit_doc_len(engine):
     terms = engine.tokenize_query("spark table")
-    exploded = engine._exploded_postings(terms)
+    exploded = engine.shards[0]._exploded_postings(terms)
     assert "doc_len" in exploded.columns
     row = exploded.limit(1).collect()[0]
     assert row["doc_len"] > 0

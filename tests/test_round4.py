@@ -21,11 +21,11 @@ def test_k_beyond_theta_topk_uses_block_max_fallback(engine):
     assert THETA_TOPK == 100  # the pin below encodes this boundary
     k = 2 * THETA_TOPK
     terms = engine.tokenize_query("spark table join fast value")
-    stats = engine._term_stats(terms)
+    stats = engine.shards[0]._term_stats(terms)
     terms = [t for t in terms if t in stats]
-    theta = engine._theta_from_blocks(terms, "bm25", k)
+    theta = engine.shards[0]._theta_from_blocks(terms, "bm25", k)
     want = 0.0
-    for t, blocks in engine._block_maxima(terms).items():
+    for t, blocks in engine.shards[0]._block_maxima(terms).items():
         if len(blocks) >= k:
             want = max(
                 want,
@@ -56,29 +56,29 @@ def test_block_summary_load_decision_memoized(engine):
     """The full-load decision is computed once per instance: after the
     first probe the flag is set and a repeat probe answers from RAM
     (the ADVICE fix — no per-call directory re-walk)."""
-    engine._block_summary(["spark"])
-    assert engine._block_summary_should_load is not None
+    engine.shards[0]._block_summary(["spark"])
+    assert engine.shards[0]._block_summary_should_load is not None
     # fixture-scale summary must take the RAM-resident path
-    assert engine._block_summary_should_load is True
-    assert engine._block_summary_full is True
+    assert engine.shards[0]._block_summary_should_load is True
+    assert engine.shards[0]._block_summary_full is True
     # refresh() resets the decision
     engine.refresh()
-    assert engine._block_summary_should_load is None
+    assert engine.shards[0]._block_summary_should_load is None
 
 
 def test_candidates_driver_path(engine, monkeypatch):
     """The driver-side pyarrow candidate read (_candidates_driver):
     force the range-prune path and check MaxScore == DAAT."""
     calls = []
-    real = engine._candidates_driver
+    real = engine.shards[0]._candidates_driver
 
     def spy(*args, **kwargs):
         ids = real(*args, **kwargs)
         calls.append(len(ids))
         return ids
 
-    monkeypatch.setattr(engine, "_candidates_driver", spy)
-    monkeypatch.setattr(engine, "PRUNE_MIN_POSTINGS", 0, raising=False)
+    monkeypatch.setattr(engine.shards[0], "_candidates_driver", spy)
+    monkeypatch.setattr(engine.shards[0], "PRUNE_MIN_POSTINGS", 0, raising=False)
     q = "dup spark batch"  # one rare term: the essential list is small
     want = [
         (r["rank"], r["doc_id"], r["score"])

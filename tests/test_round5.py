@@ -11,7 +11,6 @@
    bare IndexError / struct.error escape).
 """
 
-import json
 import os
 import struct
 

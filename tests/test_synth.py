@@ -82,7 +82,7 @@ def test_range_prune_engages_and_is_exact(zipf_engine):
     # corpus this small — force it so the path itself stays pinned
     # (instance attribute, restored in the finally below: the fixture is
     # shared, so a leaked override would change later tests' paths)
-    eng.PRUNE_MIN_POSTINGS = 0
+    eng.shards[0].PRUNE_MIN_POSTINGS = 0
     try:
         lex = [
             (r["term"], r["df"])
@@ -92,14 +92,14 @@ def test_range_prune_engages_and_is_exact(zipf_engine):
         common = max(lex, key=lambda r: (r[1], r[0]))[0]
         q = f"{rare} {common}"
         terms = [t for t in eng.tokenize_query(q)]
-        stats = eng._term_stats(terms)
+        stats = eng.shards[0]._term_stats(terms)
         terms = [t for t in terms if t in stats]
         assert len(terms) == 2
-        theta = eng._theta_from_blocks(terms, "bm25", 10)
+        theta = eng.shards[0]._theta_from_blocks(terms, "bm25", 10)
         assert theta > stats[common]["max_bm25"], (
             "theta must exclude the common term"
         )
-        plan = eng._maxscore(terms, stats, "bm25", 10)
+        plan = eng.shards[0]._maxscore(terms, stats, "bm25", 10)
         ptxt = plan._jdf.queryExecution().executedPlan().toString()
         # literal form: exists() containment over block ranges; DF form:
         # broadcast range join — either means the scan is
@@ -110,11 +110,11 @@ def test_range_prune_engages_and_is_exact(zipf_engine):
         got = [(r["doc_id"], r["score"]) for r in plan.collect()]
         want = [
             (r["doc_id"], r["score"])
-            for r in eng._daat(terms, stats, "bm25", 10).collect()
+            for r in eng.shards[0]._daat(terms, stats, "bm25", 10).collect()
         ]
         assert got == want
     finally:
-        del eng.PRUNE_MIN_POSTINGS  # restore the class default
+        del eng.shards[0].PRUNE_MIN_POSTINGS  # restore the class default
 
 
 def test_maxscore_equals_daat_on_mixed_queries(zipf_engine):
