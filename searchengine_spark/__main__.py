@@ -63,10 +63,7 @@ def cmd_query(args) -> None:
     # a sharded index directory opens as N shards of the same engine
     engine = SearchEngine(spark, args.index)
     if args.phrase:
-        result = engine.phrase_search(args.text, k=args.k)
-        result = engine.doctable.select("doc_id", "docno").join(
-            result, "doc_id"
-        ).select("rank", "doc_id", "docno", "score")
+        result = engine.add_docno(engine.phrase_search(args.text, k=args.k))
     else:
         result = engine.search(
             args.text,

@@ -81,7 +81,15 @@ def bm25_partial_py(tf, doc_len, avgdl: float, k1: float = 1.2, b: float = 0.75)
     return tf / (k1 * ((1.0 - b) + b * doc_len / avgdl) + tf)
 
 
-def tfidf_partial_py(tf):
+def tfidf_partial_py(tf, log10):
+    """numpy mirror of :func:`tfidf_partial_expr`: 1 + log10(tf).
+
+    ``log10`` maps one float to its log10 with the bits Spark's
+    ``F.log10`` gives (``java.lang.StrictMath.log10``); numpy's log10
+    differs from it in the last bit for some tf (11, 24, 39, ...). It is
+    called once per distinct tf, so a memoized JVM call stays cheap."""
     import numpy as np
 
-    return 1.0 + np.log10(tf)
+    distinct, inverse = np.unique(tf, return_inverse=True)
+    logs = np.array([log10(x) for x in distinct.tolist()], dtype=np.float64)
+    return 1.0 + logs[inverse]

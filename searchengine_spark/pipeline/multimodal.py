@@ -214,11 +214,11 @@ def wav_encode(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE PCM decode -> ((n_samples, channels) float64 in
-    [-1, 1], sample_rate). Pure struct+numpy chunk walk (public RIFF
-    spec): PCM 8/16/32-bit integer and IEEE-float-32 formats; anything
-    compressed raises NotImplementedError with the format tag named."""
+def _wav_chunks(payload: bytes) -> tuple[tuple, memoryview]:
+    """(fmt fields, data chunk) of a RIFF/WAVE payload. The fmt fields
+    are (format tag, channels, sample rate, byte rate, block align,
+    bits per sample); the data chunk is a zero-copy view, cut short
+    where the payload ends."""
     if payload[:4] != WAV_MAGIC:
         raise ValueError("not a RIFF/WAVE payload")
     if payload[8:12] != b"WAVE":
@@ -231,13 +231,14 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
             "RIFF/WAVE PCM decodes (WEBP/AVI codec libraries unavailable "
             "in this environment — use fake=True for those)"
         )
+    view = memoryview(payload)
     pos = 12
     fmt = None
     data = None
     while pos + 8 <= len(payload):
         tag = payload[pos : pos + 4]
         (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
+        body = view[pos + 8 : pos + 8 + size]
         pos += 8 + size + (size & 1)  # chunks are word-aligned
         if tag == b"fmt ":
             fmt = struct.unpack("<HHIIHH", body[:16])
@@ -245,6 +246,30 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
             data = body
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
+    return fmt, data
+
+
+def wav_metadata(payload: bytes) -> dict:
+    """Codec and duration of a RIFF/WAVE payload, from the fmt chunk
+    and the data chunk's size — no sample is decoded. PCM (integer or
+    IEEE float) counts whole frames of ``block align`` bytes at the
+    sample rate; a compressed format divides the data size by its byte
+    rate, and its codec is named by the format tag."""
+    (audio_fmt, _ch, rate, byte_rate, block, _bits), data = _wav_chunks(payload)
+    if audio_fmt in (1, 3):
+        return {"codec": "pcm", "duration_sec": round(len(data) // block / rate, 6)}
+    return {
+        "codec": f"wav-0x{audio_fmt:04x}",
+        "duration_sec": round(len(data) / byte_rate, 6),
+    }
+
+
+def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
+    """RIFF/WAVE PCM decode -> ((n_samples, channels) float64 in
+    [-1, 1], sample_rate). Pure struct+numpy chunk walk (public RIFF
+    spec): PCM 8/16/32-bit integer and IEEE-float-32 formats; anything
+    compressed raises NotImplementedError with the format tag named."""
+    fmt, data = _wav_chunks(payload)
     audio_fmt, ch, rate, _bps, _block, bits = fmt
     if audio_fmt == 1:  # integer PCM
         if bits == 8:
@@ -564,11 +589,8 @@ def container_metadata(payload: bytes):
             m = mp3_metadata(payload)
             return None, None, "mp3", "mp3", m["duration_sec"]
         if payload[:4] == WAV_MAGIC and payload[8:12] == b"WAVE":
-            samples, rate = wav_decode(payload)
-            return (
-                None, None, "wav", "pcm",
-                round(samples.shape[0] / rate, 6),
-            )
+            m = wav_metadata(payload)
+            return None, None, "wav", m["codec"], m["duration_sec"]
         w, h, fmt = image_dimensions(payload)
         if fmt is not None:
             return w, h, fmt, fmt, None
@@ -637,8 +659,8 @@ def attach_media_metadata(
     format, codec, duration_sec) via a vectorized pandas UDF that parses
     only container headers — PNG IHDR / JPEG SOF dimensions, MP4 box
     tree (tkhd dimensions, mvhd duration, stsd codec fourcc), MP3 frame
-    headers (duration), WAVE fmt+data (duration) — never sample data.
-    Nulls for unrecognized payloads."""
+    headers (duration), WAVE fmt chunk + data chunk size (duration) —
+    never sample data. Nulls for unrecognized payloads."""
     out = df.withColumn(
         "n_bytes", F.length(F.col(payload_col)).cast("long")
     ).withColumn("payload_sha", F.sha2(F.col(payload_col), 256))

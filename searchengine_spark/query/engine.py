@@ -49,6 +49,12 @@ shard; a directory holding ``sharded_manifest.json`` (written by
 tokenize, sum the term stats over the shards, gate the route, fan out,
 merge the per-shard top-k on (key desc, doc_id asc), rank. With one
 shard the merge passes the shard's own result through untouched.
+
+Results: the distributed route returns a Spark plan. The driver-local
+route (and every empty result) returns a :class:`LocalResult`, a
+DataFrame that holds its k rows on the driver: collecting it costs no
+JVM round trip, and its Spark plan is built only if a caller asks for
+one.
 """
 
 from __future__ import annotations
@@ -56,12 +62,13 @@ from __future__ import annotations
 import json
 import numbers
 import os
-from functools import reduce
-from typing import Optional, Sequence
+from functools import cached_property, reduce
+from typing import Callable, Optional, Sequence
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -112,6 +119,103 @@ def spark_log10(spark: SparkSession, x: float) -> float:
     return spark._jvm.java.lang.StrictMath.log10(float(x))
 
 
+# Spark SQL literal and pandas dtype of each column type a result holds
+_SQL_LITERAL = {
+    "int": "{:d}".format,
+    "long": "{:d}L".format,
+    # repr round-trips IEEE754 exactly and parseDouble is correctly
+    # rounded, so a score keeps its bits through the literal
+    "double": "CAST('{!r}' AS DOUBLE)".format,
+    # hex UTF-8 bytes: no quoting or escaping rules to get wrong
+    "string": lambda v: f"CAST(X'{v.encode().hex()}' AS STRING)",
+}
+_PANDAS_DTYPE = {"int": "int32", "long": "int64", "double": "float64", "string": "object"}
+
+
+class LocalResult(ClassicDataFrame):
+    """A query result computed on the driver that is still a DataFrame.
+
+    It wraps the pandas top-k frame and its schema string. ``collect()``,
+    ``count()``, ``take()``/``head()``/``first()``, ``isEmpty()``,
+    ``toLocalIterator()``, ``toPandas()`` and ``columns`` are answered
+    from the driver-held rows: no SQL parse, no JVM round trip, no Spark
+    job. The rows are ``Row``s with the field names, Python types and
+    score bits a collect of the plan gives, and ``toPandas()`` gives
+    Spark's dtypes.
+
+    Whatever needs a JVM plan (``select``, joins, ``schema``, writes,
+    temp views, ``_jdf.queryExecution()``) gets one, built on first use
+    of ``_jdf``: a LocalRelation over a SQL VALUES clause of the same
+    rows, or an empty frame of the schema. ``createDataFrame(pandas)``
+    is no substitute: it builds an ExistingRDD whose collect is a
+    Python-worker round trip (about 0.26 s even for k rows)."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(
+        self, spark: SparkSession, schema: str, pdf: Optional[pd.DataFrame] = None
+    ):
+        # the attributes a DataFrame method reads besides _jdf
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._ddl = schema
+        self._fields = [tuple(c.split()) for c in schema.split(", ")]
+        self._pdf = pdf
+
+    @cached_property
+    def _rows(self) -> list[Row]:
+        names = self.columns
+        if self._pdf is None:
+            return []
+        return [
+            Row(**dict(zip(names, r)))
+            for r in zip(*(self._pdf[n].tolist() for n in names))
+        ]
+
+    @cached_property
+    def _jdf(self):
+        if not self._rows:
+            return self._session.createDataFrame([], self._ddl)._jdf
+        literal = [_SQL_LITERAL[t] for _, t in self._fields]
+        values = ",".join(
+            "(" + ", ".join(f(v) for f, v in zip(literal, r)) + ")"
+            for r in self._rows
+        )
+        names = ", ".join(self.columns)
+        return self._session.sql(
+            f"SELECT * FROM VALUES {values} AS t({names})"
+        )._jdf
+
+    @property
+    def columns(self) -> list[str]:
+        return [name for name, _ in self._fields]
+
+    def collect(self) -> list[Row]:
+        return list(self._rows)
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def take(self, num: int) -> list[Row]:
+        if num < 0:  # the plan raises Spark's own error
+            return super().take(num)
+        return self._rows[:num]
+
+    def isEmpty(self) -> bool:
+        return not self._rows
+
+    def toLocalIterator(self, prefetchPartitions: bool = False):
+        return iter(self.collect())
+
+    def toPandas(self) -> pd.DataFrame:
+        return pd.DataFrame.from_records(self._rows, columns=self.columns).astype(
+            {name: _PANDAS_DTYPE[t] for name, t in self._fields}
+        )
+
+
 class IndexShard:
     """What one index directory built by :class:`IndexBuilder` owns: its
     lexicon/postings/positions/doctable readers, their memo caches, and
@@ -129,6 +233,7 @@ class IndexShard:
         self,
         spark: SparkSession,
         index_dir: str,
+        log10: Callable[[float], float],
         global_stats: Optional[dict] = None,
     ):
         self.spark = spark
@@ -146,11 +251,19 @@ class IndexShard:
         self._phrase_caches: list[DataFrame] = []
         self._lexicon_df: Optional[DataFrame] = None
         self._positions_df: Optional[DataFrame] = None
-        self._pa_postings = None
-        self._pa_lexicon = None
-        self._pa_positions = None
-        self.postings = spark.read.parquet(os.path.join(self.index_dir, "postings"))
-        self.doctable = spark.read.parquet(os.path.join(self.index_dir, "doctable"))
+        self._pa: dict = {}
+        self.log10 = log10
+
+    # Spark frames over the index tables, opened on first use: reading a
+    # parquet schema launches a Spark job, and the driver-local route
+    # never needs these frames.
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "postings"))
+
+    @cached_property
+    def doctable(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "doctable"))
 
     def warm(self) -> None:
         """Pin the postings frame in executor memory and materialize it —
@@ -186,44 +299,20 @@ class IndexShard:
 
     # ---------- plumbing ----------
 
-    def _postings_dataset(self):
-        """Memoized pyarrow dataset handle for the postings table — the
-        file listing / hive-partition discovery is a per-query driver
-        cost worth paying once per engine instance (refresh() resets)."""
-        if self._pa_postings is None:
+    def _dataset(self, table: str):
+        """Memoized pyarrow dataset handle for one index table
+        (postings, positions, lexicon, doctable) — the file listing and
+        hive-partition discovery is a per-query driver cost worth paying
+        once per engine instance (refresh() resets)."""
+        if table not in self._pa:
             import pyarrow.dataset as ds
 
-            self._pa_postings = ds.dataset(
-                os.path.join(self.index_dir, "postings"),
+            self._pa[table] = ds.dataset(
+                os.path.join(self.index_dir, table),
                 format="parquet",
                 partitioning="hive",
             )
-        return self._pa_postings
-
-    def _positions_dataset(self):
-        """Memoized pyarrow dataset handle for the positional table
-        (phrase fast path) — same once-per-engine listing trade as
-        _postings_dataset."""
-        if self._pa_positions is None:
-            import pyarrow.dataset as ds
-
-            self._pa_positions = ds.dataset(
-                os.path.join(self.index_dir, "positions"),
-                format="parquet",
-                partitioning="hive",
-            )
-        return self._pa_positions
-
-    def _lexicon_dataset(self):
-        if self._pa_lexicon is None:
-            import pyarrow.dataset as ds
-
-            self._pa_lexicon = ds.dataset(
-                os.path.join(self.index_dir, "lexicon"),
-                format="parquet",
-                partitioning="hive",
-            )
-        return self._pa_lexicon
+        return self._pa[table]
 
     def _bucket_filter(self, terms: Sequence[str]):
         buckets = sorted({term_bucket_py(t, self.config.n_term_buckets) for t in terms})
@@ -250,7 +339,7 @@ class IndexShard:
         if missing:
             import pyarrow.dataset as ds
 
-            dataset = self._lexicon_dataset()
+            dataset = self._dataset("lexicon")
             buckets = sorted(
                 {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
             )
@@ -276,7 +365,7 @@ class IndexShard:
         if missing:
             import pyarrow.dataset as ds
 
-            dataset = self._postings_dataset()
+            dataset = self._dataset("postings")
             buckets = sorted(
                 {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
             )
@@ -412,7 +501,7 @@ class IndexShard:
 
         bm_col = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
         ub_key = "max_bm25" if scorer == "bm25" else "max_tfidf"
-        dataset = self._postings_dataset()
+        dataset = self._dataset("postings")
         expr = None
         for t in essential:
             thresh = theta - (total_ub - stats[t][ub_key])
@@ -622,7 +711,7 @@ class IndexShard:
         import numpy as np
         import pyarrow.dataset as ds
 
-        dataset = self._postings_dataset()
+        dataset = self._dataset("postings")
         buckets = sorted(
             {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
         )
@@ -689,9 +778,11 @@ class IndexShard:
         """Driver-side numpy scoring — bit-identical to the distributed
         plan: per-(term, doc) partials use the same double-precision
         operation order as bm25_partial_expr/tfidf_partial_expr
-        (bm25_partial_py is the documented mirror), and per-doc sums
-        fold addends in sorted-term order exactly like _sum_scores'
-        coalesce chain (0.0 + s == s for the non-negative addends).
+        (bm25_partial_py/tfidf_partial_py are the mirrors; TFIDF's log10
+        is Spark's own, through the engine's memoized ``log10``), and
+        per-doc sums fold addends in sorted-term order exactly like
+        _sum_scores' coalesce chain (0.0 + s == s for the non-negative
+        addends).
         ``algo='maxscore'`` applies the same metadata theta + block-max
         pruning as _maxscore — the identical exactness argument holds,
         just without a Spark job."""
@@ -731,7 +822,7 @@ class IndexShard:
                     tf, dl, self.stats["avgdl"], self.config.k1, self.config.b
                 )
             else:
-                partial = tfidf_partial_py(tf)
+                partial = tfidf_partial_py(tf, self.log10)
             scores[pos] += partial * stats[t]["idf"]
             counts[pos] += 1
         keep = np.ones(uniq.size, dtype=bool)
@@ -773,7 +864,7 @@ class IndexShard:
         from ..functions.scoring import bm25_partial_py
 
         L = len(terms)
-        dataset = self._positions_dataset()
+        dataset = self._dataset("positions")
         buckets = sorted(
             {term_bucket_py(t, self.config.n_term_buckets) for t in set(terms)}
         )
@@ -1360,13 +1451,18 @@ class SearchEngine:
             global_stats = m["stats"]
         else:
             dirs, global_stats = [self.index_dir], None
-        self.shards = [IndexShard(self.spark, d, global_stats) for d in dirs]
+        self.shards = [
+            IndexShard(self.spark, d, self._log10, global_stats) for d in dirs
+        ]
         self.config = self.shards[0].config
         self.stats = self.shards[0].stats
-        self.doctable = reduce(
-            DataFrame.unionByName, [s.doctable for s in self.shards]
-        )
-        self._idf_by_df: dict[int, float] = {}
+        self.__dict__.pop("doctable", None)
+        self._log10_memo: dict[float, float] = {}
+
+    @cached_property
+    def doctable(self) -> DataFrame:
+        """The union of the shards' doctables (doc_id, docno, ...)."""
+        return reduce(DataFrame.unionByName, [s.doctable for s in self.shards])
 
     def refresh(self) -> None:
         """Re-open the index: drop the per-term memo caches and re-read
@@ -1431,14 +1527,18 @@ class SearchEngine:
                 }
         return stats, per_shard
 
+    def _log10(self, x: float) -> float:
+        """spark_log10(x), memoized by x until refresh(). It serves the
+        idf of a df (x = n_docs / df) and the shards' TFIDF partial of
+        a tf (x = tf), each distinct argument costing one JVM call."""
+        y = self._log10_memo.get(x)
+        if y is None:
+            y = self._log10_memo[x] = spark_log10(self.spark, x)
+        return y
+
     def _idf(self, df: int) -> float:
-        """log10(n_docs / df) with Spark's bits (spark_log10), memoized
-        by df until refresh()."""
-        idf = self._idf_by_df.get(df)
-        if idf is None:
-            idf = spark_log10(self.spark, float(self.stats["n_docs"]) / df)
-            self._idf_by_df[df] = idf
-        return idf
+        """log10(n_docs / df) with Spark's bits."""
+        return self._log10(float(self.stats["n_docs"]) / df)
 
     def _fan_out(self, terms, stats, per_shard, complete: bool) -> list:
         """(shard, its terms, their stats under the collection idf) for
@@ -1470,28 +1570,33 @@ class SearchEngine:
             <= self.LOCAL_EXEC_MAX_POSTINGS
         )
 
-    def _local_df(
-        self, schema: str, pdf: Optional[pd.DataFrame] = None
-    ) -> DataFrame:
-        """A driver-computed result (no rows when ``pdf`` is None or
-        empty) as a LocalRelation via a SQL VALUES clause: collect() is
-        then driver-only — NO Spark job at all (createDataFrame(pandas)
-        builds an ExistingRDD whose collect costs a full Python-worker
-        round-trip, measured ~0.26 s even for k rows). Doubles ride as
-        CAST('<repr>' AS DOUBLE): repr round-trips IEEE754 exactly and
-        parseDouble is correctly rounded, so the scores are
-        bit-identical to the numpy values."""
+    def add_docno(self, result: DataFrame) -> DataFrame:
+        """``result`` (rank, doc_id, score, ...) with each row's docno
+        after its doc_id. A driver-held result takes docno from a
+        pyarrow probe of the shards' doctables (doc_id in its k ids)
+        and stays driver-held; a Spark result joins the doctable,
+        broadcasting the k-row result. A row whose doc_id the doctable
+        lacks drops out on both routes, as in an inner join."""
+        if not isinstance(result, LocalResult):
+            rest = [c for c in result.columns if c not in ("rank", "doc_id")]
+            return self.doctable.select("doc_id", "docno").join(
+                F.broadcast(result), "doc_id"
+            ).select("rank", "doc_id", "docno", *rest)
+        ddl = result._ddl.replace("doc_id long", "doc_id long, docno string")
+        pdf = result._pdf
         if pdf is None or len(pdf) == 0:
-            return self.spark.createDataFrame([], schema)
-        names, types = zip(*(c.split() for c in schema.split(", ")))
-        literal = {"int": "{:d}", "long": "{:d}L", "double": "CAST('{!r}' AS DOUBLE)"}
-        row = "(" + ", ".join(literal[t] for t in types) + ")"
-        rows = ",".join(
-            row.format(*r) for r in zip(*(pdf[n].tolist() for n in names))
-        )
-        return self.spark.sql(
-            f"SELECT * FROM VALUES {rows} AS t({', '.join(names)})"
-        )
+            return LocalResult(self.spark, ddl)
+        import pyarrow.dataset as ds
+
+        ids = pdf["doc_id"].tolist()
+        docno: dict[int, str] = {}
+        for shard in self.shards:
+            tbl = shard._dataset("doctable").to_table(
+                filter=ds.field("doc_id").isin(ids), columns=["doc_id", "docno"]
+            )
+            docno.update(zip(tbl["doc_id"].to_pylist(), tbl["docno"].to_pylist()))
+        pdf = pdf[pdf["doc_id"].isin(list(docno))]
+        return LocalResult(self.spark, ddl, pdf.assign(docno=pdf["doc_id"].map(docno)))
 
     @staticmethod
     def _driver_merge(parts: list, key: str, k: int) -> pd.DataFrame:
@@ -1553,6 +1658,14 @@ class SearchEngine:
         bit-identical either way (same formulas, same summation order,
         same tie-break).
 
+        The driver-local route, and every empty result, returns a
+        :class:`LocalResult`: a DataFrame whose collect()/toPandas()/
+        count() answer from the driver-held rows with no JVM round
+        trip, and which builds a Spark plan only when a caller needs
+        one (a join, select, schema, ...). ``with_docno`` on that route
+        takes docno from a driver-side doctable probe (add_docno); the
+        distributed route joins the doctable.
+
         Over N > 1 shards ``algo='maxscore'`` runs DAAT (identical
         results — MaxScore only prunes): the persisted per-block maxima
         embed each shard's LOCAL idf, which is not an upper bound under
@@ -1565,14 +1678,14 @@ class SearchEngine:
         terms = [t for t in terms if t in stats]  # drop unknown terms (J5)
         work = self._fan_out(terms, stats, per_shard, mode == "conjunctive")
         if not work:
-            result = self._local_df(TOPK_SCHEMA)
+            result = LocalResult(self.spark, TOPK_SCHEMA)
         elif self._local_ok(terms, stats, local):
             parts = [
                 shard._local_topk(ts, sub, scorer, mode, algo, k)
                 for shard, ts, sub in work
             ]
-            result = self._local_df(
-                TOPK_SCHEMA, self._driver_merge(parts, "score", k)
+            result = LocalResult(
+                self.spark, TOPK_SCHEMA, self._driver_merge(parts, "score", k)
             )
         else:
             parts = [
@@ -1580,12 +1693,7 @@ class SearchEngine:
                 for shard, ts, sub in work
             ]
             result = self._spark_merge(parts, "score", k)
-        if with_docno:
-            # broadcast the k-row RESULT and stream the doctable past it
-            result = self.doctable.select("doc_id", "docno").join(
-                F.broadcast(result), "doc_id"
-            ).select("rank", "doc_id", "docno", "score")
-        return result
+        return self.add_docno(result) if with_docno else result
 
     def phrase_search(
         self, phrase: str, k: int = 10, local: Optional[bool] = None
@@ -1602,7 +1710,9 @@ class SearchEngine:
         idf-free partial, a per-doc quantity, so the global top-k is
         in the union of per-shard top-k; the phrase's df is the sum of
         the shards' disjoint matched-doc counts, and its idf scales only
-        the k winners. The route gate sums the terms' cf."""
+        the k winners. The route gate sums the terms' cf; the
+        driver-local route and every empty result return a
+        :class:`LocalResult`, as in search()."""
         validate_query_args(k)
         if not os.path.exists(os.path.join(self.shards[0].index_dir, "positions")):
             raise RuntimeError(
@@ -1612,7 +1722,7 @@ class SearchEngine:
         stats, per_shard = self._probe(terms)
         work = self._fan_out(terms, stats, per_shard, complete=True)
         if not work or any(t not in stats for t in terms):
-            return self._local_df(PHRASE_SCHEMA)
+            return LocalResult(self.spark, PHRASE_SCHEMA)
 
         if self._local_ok(terms, stats, local, key="cf"):
             parts, phrase_df = [], 0
@@ -1621,13 +1731,13 @@ class SearchEngine:
                 parts.append(pdf)
                 phrase_df += n
             if phrase_df == 0:
-                return self._local_df(PHRASE_SCHEMA)
+                return LocalResult(self.spark, PHRASE_SCHEMA)
             top = self._driver_merge(parts, "partial", k)
             top = top.assign(
                 rank=range(1, len(top) + 1),
                 score=top["partial"].to_numpy() * self._idf(phrase_df),
             )
-            return self._local_df(PHRASE_SCHEMA, top)
+            return LocalResult(self.spark, PHRASE_SCHEMA, top)
 
         plans = [shard._phrase_plan(terms, k) for shard, _ts, _sub in work]
         topk = self._spark_merge([p[0] for p in plans], "_partial", k)
@@ -1674,7 +1784,7 @@ class SearchEngine:
             (qid, sorted({t for t in ts if t in stats})) for qid, ts in tokenized
         ]
         if not any(ts for _, ts in known):
-            return self._local_df(BATCH_SCHEMA)
+            return LocalResult(self.spark, BATCH_SCHEMA)
         parts = [
             shard._batch_plan(known, stats, scorer, mode, algo, k)
             for shard in self.shards

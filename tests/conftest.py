@@ -1,4 +1,6 @@
 import shutil
+import uuid
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import SparkSession
@@ -42,3 +44,24 @@ def index_dir(spark, corpus, tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
     build_index(spark, corpus, d, TEST_CONFIG)
     return d
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` counts the Spark jobs the
+    block launched (through a job group and the status tracker) into
+    ``jobs[0]``."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"count-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, "counted block")
+        try:
+            yield jobs
+        finally:
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return count

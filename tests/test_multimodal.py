@@ -168,6 +168,55 @@ def test_wav_compressed_format_rejected():
         MM.wav_decode(bytes(buf))
 
 
+def _wav_float32(samples: np.ndarray, rate: int) -> bytes:
+    """An IEEE-float-32 RIFF/WAVE payload (format tag 3)."""
+    a = np.asarray(samples, dtype="<f4")
+    a = a[:, None] if a.ndim == 1 else a
+    block = a.shape[1] * 4
+    fmt = struct.pack("<HHIIHH", 3, a.shape[1], rate, rate * block, block, 32)
+    data = a.tobytes()
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+@pytest.mark.parametrize("channels", [1, 2])
+@pytest.mark.parametrize("kind", ["int8", "int16", "int32", "float32"])
+def test_wav_duration_from_headers_equals_decoded(kind, channels, monkeypatch):
+    """container_metadata's WAV duration comes from the fmt and data
+    chunk headers, and equals the duration of the decoded samples."""
+    payloads = []
+    for n, rate in ((16_000, 16_000), (12_345, 8_000), (1, 44_100), (0, 22_050)):
+        tone = np.sin(np.arange(n * channels) / 7.0).reshape(n, channels)
+        if kind == "float32":
+            payloads.append((_wav_float32(tone, rate), rate))
+        else:
+            bits = int(kind[3:])
+            payloads.append((MM.wav_encode(tone, sample_rate=rate, bits=bits), rate))
+    want = [round(MM.wav_decode(p)[0].shape[0] / rate, 6) for p, rate in payloads]
+
+    def no_decode(payload):
+        raise AssertionError("metadata decoded the samples")
+
+    monkeypatch.setattr(MM, "wav_decode", no_decode)
+    got = [MM.container_metadata(p) for p, _ in payloads]
+    assert got == [(None, None, "wav", "pcm", w) for w in want]
+
+
+def test_wav_compressed_format_has_duration():
+    """A compressed WAV (format tag 2, MS ADPCM) does not decode, but
+    its duration is the data size over the fmt chunk's byte rate."""
+    buf = bytearray(MM.wav_encode(np.zeros(8_000), sample_rate=16_000, bits=16))
+    i = buf.find(b"fmt ")
+    struct.pack_into("<HHIIHH", buf, i + 8, 2, 1, 16_000, 4_000, 256, 4)
+    assert MM.container_metadata(bytes(buf)) == (
+        None, None, "wav", "wav-0x0002", 4.0
+    )
+
+
 def test_extract_features_real_wav(spark):
     t = np.arange(8000) / 8000.0
     buf = MM.wav_encode(np.sin(2 * np.pi * 100 * t), sample_rate=8000)

@@ -3,6 +3,7 @@ the global (score desc, doc_id asc) order must reproduce the
 single-index results bit for bit, across shard counts, modes, and both
 merge paths (driver-local and distributed union)."""
 
+import argparse
 import json
 import os
 
@@ -14,7 +15,7 @@ from searchengine_spark.index.sharded import (
     ShardedSearchEngine,
     build_sharded_index,
 )
-from searchengine_spark.query.engine import SearchEngine
+from searchengine_spark.query.engine import LocalResult, SearchEngine
 from tests.conftest import TEST_CONFIG
 
 QUERIES = [
@@ -283,3 +284,80 @@ def test_sharded_phrase_equals_single_on_positions_index(positions_pair, local):
         assert got == want, (p, local)
         matched += bool(want)
     assert matched >= 3
+
+
+def _raise(*args, **kwargs):
+    raise AssertionError("a driver-local result built a Spark plan")
+
+
+def test_sharded_local_results_need_no_sql_parse(spark, single, sharded, monkeypatch):
+    """The driver merge of N shards returns a LocalResult: with
+    spark.sql and spark.createDataFrame unusable it still collects the
+    single index's distributed rows (docno and empty results too), and
+    it still works as a DataFrame."""
+    calls = [
+        dict(query=QUERIES[0]),
+        dict(query=QUERIES[1], with_docno=True, k=20),
+        dict(query="the and of", with_docno=True),
+    ]
+    want = [
+        sorted(single.search(local=False, **kw).collect(), key=lambda r: r["rank"])
+        for kw in calls
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(spark, "sql", _raise)
+        m.setattr(spark, "createDataFrame", _raise)
+        results = [sharded.search(**kw) for kw in calls]
+        for kw, got, rows in zip(calls, results, want):
+            assert isinstance(got, LocalResult)
+            assert [r.asDict() for r in got.collect()] == [r.asDict() for r in rows], kw
+            assert got.count() == len(rows)
+    got, ref = results[1], single.search(local=False, **calls[1])
+    assert got.dtypes == ref.dtypes
+    assert got.toPandas().dtypes.to_dict() == ref.toPandas().dtypes.to_dict()
+    joined = got.join(sharded.doctable.select("doc_id", "sha256"), "doc_id")
+    assert joined.count() == len(want[1])
+
+
+def test_local_phrase_needs_no_sql_parse(spark, positions_pair, monkeypatch):
+    """Local phrase results — one shard and two — collect the single
+    index's distributed phrase rows with spark.sql and
+    spark.createDataFrame unusable."""
+    single, sharded = positions_pair
+    want = {
+        p: [r.asDict() for r in single.phrase_search(p, k=10, local=False).collect()]
+        for p in PHRASES
+    }
+    with monkeypatch.context() as m:
+        m.setattr(spark, "sql", _raise)
+        m.setattr(spark, "createDataFrame", _raise)
+        for engine in (single, sharded):
+            for p in PHRASES:
+                got = engine.phrase_search(p, k=10, local=True)
+                assert isinstance(got, LocalResult)
+                assert [r.asDict() for r in got.collect()] == want[p], p
+    assert any(want.values())
+
+
+def test_cli_phrase_takes_docno_on_the_driver(spark, positions_pair, spark_jobs, capsys):
+    """`query --phrase` on the driver-local route launches 0 Spark jobs:
+    docno comes from the same doctable probe as search(with_docno=True),
+    and equals the doctable join of the distributed phrase rows."""
+    from searchengine_spark.__main__ import cmd_query
+
+    for engine in positions_pair:
+        args = argparse.Namespace(
+            index=engine.index_dir, text="spark table", k=10, phrase=True,
+            conjunctive=False, scorer="bm25", algo="daat", cpus=None,
+        )
+        with spark_jobs() as jobs:
+            cmd_query(args)
+        assert jobs == [0]
+        lines = capsys.readouterr().out.splitlines()
+        rows = engine.doctable.select("doc_id", "docno").join(
+            engine.phrase_search("spark table", k=10, local=False), "doc_id"
+        ).collect()
+        assert lines and lines == [
+            f"{r['rank']:>4}  {r['score']:>12.6f}  {r['doc_id']:>10}  {r['docno']}"
+            for r in sorted(rows, key=lambda r: r["rank"])
+        ]
