@@ -27,6 +27,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """16g, or half of the host's RAM (MemTotal) when that is less."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                half_mb = int(line.split()[1]) // 1024 // 2
+                return f"{min(16 * 1024, half_mb)}m"
+    return "16g"
+
+
 def make_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -36,7 +46,7 @@ def make_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
         # G1 shows 2x run-to-run variance on this allocation-heavy
         # workload (see BASELINE.md); ParallelGC is stable and faster
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")

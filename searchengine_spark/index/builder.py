@@ -627,7 +627,12 @@ class IndexBuilder:
 def write_positions(pos_rows: DataFrame, path: str, cfg: EngineConfig) -> None:
     """Positional table (term, doc_id, positions, doc_len), bucket-
     partitioned like postings so a phrase query partition-prunes to its
-    terms' buckets and term-sorted so row-group stats skip the rest.
+    terms' buckets. The rows within a bucket file are NOT term-sorted:
+    the ``partitionBy("term_bucket")`` write re-sorts each task's rows
+    by ``term_bucket`` alone, which discards the
+    ``sortWithinPartitions("term", "doc_id")`` order (the same holds for
+    the lexicon, postings and block_summary writes), so row-group stats
+    on ``term`` prune nothing. Readers must not rely on row order.
     Shared by the batch build and streaming compaction."""
     write_table(
         pos_rows.withColumn(

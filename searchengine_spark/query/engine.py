@@ -62,6 +62,7 @@ from __future__ import annotations
 import json
 import numbers
 import os
+from collections import OrderedDict
 from functools import cached_property, reduce
 from typing import Callable, Optional, Sequence
 
@@ -216,6 +217,103 @@ class LocalResult(ClassicDataFrame):
         )
 
 
+class ResidentIndex:
+    """Decoded index partitions the driver keeps between queries: one
+    LRU per engine, summed over all its shards, bounded in bytes.
+
+    ``get`` answers a partition from RAM, or decodes it with ``load``
+    and keeps it when it fits, evicting the least recently used ones. A
+    partition larger than the budget is decoded for the query that
+    needs it and not kept. ``reserve`` charges bytes held outside the
+    LRU (a shard's block summary loaded whole) against the same budget."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.reserved = 0
+        self.resident = 0
+        self._lru: OrderedDict = OrderedDict()
+
+    def __contains__(self, key) -> bool:
+        return key in self._lru
+
+    def get(self, key, load: Callable[[], tuple[object, int]]):
+        entry = self._lru.get(key)
+        if entry is not None:
+            self._lru.move_to_end(key)
+            return entry[0]
+        value, nbytes = load()
+        if self._make_room(nbytes):
+            self._lru[key] = (value, nbytes)
+            self.resident += nbytes
+        return value
+
+    def reserve(self, nbytes: int) -> bool:
+        """Charge ``nbytes`` kept outside the LRU, if they fit."""
+        if not self._make_room(nbytes):
+            return False
+        self.reserved += nbytes
+        return True
+
+    def _make_room(self, nbytes: int) -> bool:
+        if nbytes > self.budget - self.reserved:
+            return False
+        while self._lru and self.resident + self.reserved + nbytes > self.budget:
+            _, (_, n) = self._lru.popitem(last=False)
+            self.resident -= n
+        return True
+
+
+class TermBucket:
+    """One ``term_bucket`` partition of a term-keyed index table
+    (lexicon or postings), decoded into read-only numpy columns sorted
+    by (term, block_id). A term's rows are the slice ``rows(term)``;
+    each list column is one flat values array indexed through the
+    shared ``offsets``, so a term's postings are one contiguous slice.
+    Columns keep their on-disk dtypes."""
+
+    def __init__(self, tbl, lists: Sequence[str] = ()):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        keys = [("term", "ascending")]
+        if "block_id" in tbl.column_names:
+            keys.append(("block_id", "ascending"))
+        order = pc.sort_indices(tbl, sort_keys=keys).to_numpy()
+        self.terms = tbl["term"].to_numpy(zero_copy_only=False).astype(str)[order]
+        self.cols = {
+            name: tbl[name].to_numpy()[order]
+            for name in tbl.column_names
+            if name not in ("term", *lists)
+        }
+        # the list columns of a row have one length (the block's
+        # postings): gather their flat values into the sorted row order
+        # with one index array (cheaper than an Arrow take of each list)
+        self.offsets, self.values = np.zeros(1, np.int64), {}
+        if lists:
+            lengths = pc.list_value_length(tbl[lists[0]]).to_numpy()
+            starts = np.cumsum(lengths, dtype=np.int64) - lengths
+            lengths, starts = lengths[order], starts[order]
+            self.offsets = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64)))
+            gather = np.repeat(starts - self.offsets[:-1], lengths)
+            gather += np.arange(gather.size)
+            self.values = {
+                name: pc.list_flatten(tbl[name]).to_numpy()[gather] for name in lists
+            }
+        arrays = [self.terms, self.offsets, *self.cols.values(), *self.values.values()]
+        for a in arrays:
+            a.setflags(write=False)
+        self.nbytes = sum(a.nbytes for a in arrays)
+
+    def rows(self, term: str) -> tuple[int, int]:
+        """The [lo, hi) row range of ``term`` (empty when absent)."""
+        import numpy as np
+
+        return (
+            int(np.searchsorted(self.terms, term, "left")),
+            int(np.searchsorted(self.terms, term, "right")),
+        )
+
+
 class IndexShard:
     """What one index directory built by :class:`IndexBuilder` owns: its
     lexicon/postings/positions/doctable readers, their memo caches, and
@@ -223,10 +321,14 @@ class IndexShard:
     term stats (df, idf, upper bounds) they score with, so a shard of a
     sharded index scores with the global idf its engine injects.
 
-    Unlike the reference — which loads the FULL lexicon and doc table into
-    RAM before the first query (Query.java:62-72) — only the query's own
-    lexicon rows are collected (a few rows via bucket-pruned parquet read);
-    postings stay distributed.
+    Like the reference, which holds its lexicon and doc table in RAM
+    (Query.java:62-72), the driver-local route answers from decoded
+    index data kept on the driver: each lexicon and postings
+    ``term_bucket`` partition and each doctable file a query touches is
+    decoded once into numpy columns (:class:`TermBucket`) and kept in
+    the engine's :class:`ResidentIndex`, bounded by
+    DRIVER_INDEX_RAM_BYTES. The distributed route reads postings in
+    Spark.
     """
 
     def __init__(
@@ -234,6 +336,7 @@ class IndexShard:
         spark: SparkSession,
         index_dir: str,
         log10: Callable[[float], float],
+        resident: ResidentIndex,
         global_stats: Optional[dict] = None,
     ):
         self.spark = spark
@@ -243,7 +346,7 @@ class IndexShard:
             # a shard of a sharded index scores with the collection's
             # n_docs/avgdl: every scoring expression reads self.stats
             self.stats = {**json.load(f), **(global_stats or {})}
-        self._lex_cache: dict[str, Optional[dict]] = {}
+        self.resident = resident
         self._block_max_cache: dict[str, list[dict]] = {}
         self._block_summary_cache: dict[str, Optional[dict]] = {}
         self._block_summary_full = False
@@ -288,8 +391,8 @@ class IndexShard:
     @property
     def lexicon(self) -> DataFrame:
         """Full lexicon as a DataFrame (analytics over the dictionary).
-        Lazy: the QUERY path never touches it — per-term probes go through
-        the bucket-pruned pyarrow read in _term_stats — so engine
+        Lazy: the QUERY path never touches it — per-term probes go to
+        the resident lexicon buckets in _term_stats — so engine
         construction skips the parquet listing/schema pass."""
         if self._lexicon_df is None:
             self._lexicon_df = self.spark.read.parquet(
@@ -301,9 +404,11 @@ class IndexShard:
 
     def _dataset(self, table: str):
         """Memoized pyarrow dataset handle for one index table
-        (postings, positions, lexicon, doctable) — the file listing and
-        hive-partition discovery is a per-query driver cost worth paying
-        once per engine instance (refresh() resets)."""
+        (postings, positions, lexicon, doctable): the file listing and
+        hive-partition discovery are paid once per engine instance
+        (refresh() resets). Every driver-side Parquet read goes through
+        it; the lexicon, postings and doctable reads of the driver-local
+        route happen only when a partition is not resident."""
         if table not in self._pa:
             import pyarrow.dataset as ds
 
@@ -314,44 +419,81 @@ class IndexShard:
             )
         return self._pa[table]
 
+    def _bucket(self, table: str, term: str) -> TermBucket:
+        """The decoded ``term_bucket`` partition of ``table`` (lexicon
+        or postings) that ``term`` hashes into, from the engine's
+        resident index; decoded from Parquet when not resident."""
+        import pyarrow.dataset as ds
+
+        bucket = term_bucket_py(term, self.config.n_term_buckets)
+
+        def load():
+            columns, lists = None, ()
+            if table == "postings":  # what the driver-local route scores from
+                lists = ("doc_ids", "tfs", "doc_lens")
+                columns = ["term", "block_id", *lists, "block_max_bm25", "block_max_tfidf"]
+            tbl = self._dataset(table).to_table(
+                filter=ds.field("term_bucket") == bucket, columns=columns
+            )
+            decoded = TermBucket(tbl, lists)
+            return decoded, decoded.nbytes
+
+        return self.resident.get((self.index_dir, table, bucket), load)
+
+    @cached_property
+    def _doctable_files(self) -> list:
+        return list(self._dataset("doctable").get_fragments())
+
+    def _docnos(self, ids) -> dict[int, str]:
+        """{doc_id: docno} for the ``ids`` this shard's doctable holds.
+        Each doctable file is decoded once into its doc_ids, sorted, and
+        the matching docno Arrow array, kept in the resident index; a
+        lookup is one ``searchsorted`` per file and a take of the hits."""
+        import numpy as np
+        import pyarrow as pa
+
+        def load(frag):
+            tbl = frag.to_table(columns=["doc_id", "docno"])
+            doc_ids = tbl["doc_id"].to_numpy()
+            order = np.argsort(doc_ids, kind="stable")
+            doc_ids = doc_ids[order]
+            doc_ids.setflags(write=False)
+            docno = tbl["docno"].take(pa.array(order)).combine_chunks()
+            return (doc_ids, docno), doc_ids.nbytes + docno.nbytes
+
+        out: dict[int, str] = {}
+        for frag in self._doctable_files:
+            doc_ids, docno = self.resident.get(
+                (self.index_dir, "doctable", frag.path), lambda: load(frag)
+            )
+            if not doc_ids.size:
+                continue
+            pos = np.minimum(np.searchsorted(doc_ids, ids), doc_ids.size - 1)
+            hit = doc_ids[pos] == ids
+            if hit.any():
+                names = docno.take(pa.array(pos[hit])).to_pylist()
+                out.update(zip(ids[hit].tolist(), names))
+        return out
+
     def _bucket_filter(self, terms: Sequence[str]):
         buckets = sorted({term_bucket_py(t, self.config.n_term_buckets) for t in terms})
         return F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms))
 
     def _term_stats(self, terms: Sequence[str]) -> dict[str, dict]:
-        """J5 dictionary probe: read the (tiny) lexicon rows for the query
-        terms; absent terms drop out.
+        """J5 dictionary probe: the lexicon rows of the query terms;
+        absent terms drop out.
 
-        Driver-side pyarrow read, not a Spark job: the reference answers
-        this probe from its RAM-resident dictionary (Query.java:62-72); our
-        analogue is a footer-pruned read of only the term_bucket hive
-        partitions the query terms hash into, with the term predicate
-        pushed into the parquet scan. Probed rows are memoized per engine
-        instance — repeated query terms never touch disk again."""
+        No Spark job, and no Parquet read once the terms' lexicon
+        buckets are resident: the reference answers this probe from its
+        RAM-resident dictionary (Query.java:62-72), ours is a
+        ``searchsorted`` into the term's decoded lexicon bucket. A term
+        missing from a loaded bucket is absent from the index."""
         out: dict[str, dict] = {}
-        missing = []
         for t in terms:
-            if t in self._lex_cache:
-                if self._lex_cache[t] is not None:
-                    out[t] = self._lex_cache[t]
-            else:
-                missing.append(t)
-        if missing:
-            import pyarrow.dataset as ds
-
-            dataset = self._dataset("lexicon")
-            buckets = sorted(
-                {term_bucket_py(t, self.config.n_term_buckets) for t in missing}
-            )
-            tbl = dataset.to_table(
-                filter=ds.field("term_bucket").isin(buckets)
-                & ds.field("term").isin(missing)
-            )
-            found = {r["term"]: r for r in tbl.to_pylist()}
-            for t in missing:
-                self._lex_cache[t] = found.get(t)
-                if t in found:
-                    out[t] = found[t]
+            lex = self._bucket("lexicon", t)
+            lo, hi = lex.rows(t)
+            if lo < hi:
+                out[t] = {"term": t, **{c: v[lo].item() for c, v in lex.cols.items()}}
         return out
 
     def _block_maxima(self, terms: Sequence[str]) -> dict[str, list[dict]]:
@@ -386,7 +528,6 @@ class IndexShard:
         This bounds the theta metadata read at O(|terms| * K) driver
         bytes even for a stopword-scale term whose postings span ~1e6
         block rows. Memoized; absent terms are left out."""
-        summ_dir = os.path.join(self.index_dir, "block_summary")
         if self._block_summary_full:
             return {
                 t: self._block_summary_cache[t]
@@ -397,7 +538,7 @@ class IndexShard:
         if missing or not terms:
             import pyarrow.dataset as ds
 
-            dataset = ds.dataset(summ_dir, format="parquet", partitioning="hive")
+            dataset = self._dataset("block_summary")
             # small summary table => load it ALL once and answer every
             # later probe from RAM — the reference's own move (the full
             # dictionary is RAM-resident before the first query,
@@ -419,9 +560,8 @@ class IndexShard:
                         md.row_group(i).total_byte_size
                         for i in range(md.num_row_groups)
                     )
-                self._block_summary_should_load = (
+                self._block_summary_should_load = self.resident.reserve(
                     unc * self.PYLIST_BYTES_PER_ARROW_BYTE
-                    <= self.BLOCK_SUMMARY_RAM_BYTES
                 )
             if self._block_summary_should_load:
                 for r in dataset.to_table().to_pylist():
@@ -490,8 +630,8 @@ class IndexShard:
         analogue of the reference holding its essential posting lists in
         RAM and driving nextGEQ from them (MaxScore.java:57-74). Gated by
         the caller to small essential lists (ess_df <= RANGE_PRUNE_DF),
-        so this is a bounded bucket-pruned pyarrow read like the lexicon
-        probe (_term_stats) — NOT a Spark job: the alternative (a
+        so this is a bounded bucket-pruned pyarrow read — NOT a Spark
+        job: the alternative (a
         DataFrame candidate subplan) costs one extra broadcast-exchange
         job per query, which at local-mode overheads erases most of what
         the pruning saves. Same block-max pruning rule as
@@ -701,76 +841,28 @@ class IndexShard:
         block_thresh: Optional[dict[str, float]] = None,
         scorer: str = "bm25",
     ) -> dict[str, tuple]:
-        """Bucket-pruned driver-side pyarrow read of the query terms'
-        posting blocks -> {term: (doc_ids int64, tfs f64, doc_lens f64)}.
-        Parquet columnar projection reads ONLY the posting payload
-        columns of the matching bucket partitions; ``block_thresh``
-        applies MaxScore block pruning inside the scan filter (same rule
-        as _exploded_postings — exact only under the caller's theta
-        score filter)."""
+        """The query terms' postings from their decoded postings buckets
+        -> {term: (doc_ids int64, tfs int32, doc_lens int32)}: zero-copy
+        slices of the resident arrays. ``block_thresh`` applies MaxScore
+        block pruning, ``block_max >= thresh[term]`` (same rule as
+        _exploded_postings — exact only under the caller's theta score
+        filter), and then the kept blocks are gathered into copies."""
         import numpy as np
-        import pyarrow.dataset as ds
 
-        dataset = self._dataset("postings")
-        buckets = sorted(
-            {term_bucket_py(t, self.config.n_term_buckets) for t in terms}
-        )
-        expr = ds.field("term_bucket").isin(buckets) & ds.field("term").isin(
-            list(terms)
-        )
-        if block_thresh:
-            bm_col = (
-                "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
-            )
-            pruned = None
-            for t in terms:
-                e = (ds.field("term") == t) & (
-                    ds.field(bm_col) >= block_thresh[t]
-                )
-                pruned = e if pruned is None else (pruned | e)
-            expr = expr & pruned
-        tbl = dataset.to_table(
-            filter=expr, columns=["term", "doc_ids", "tfs", "doc_lens"]
-        ).combine_chunks()
-        term_col = tbl["term"].to_pylist()
-
-        def flat(name, dtype):
-            # ListArray -> (values ndarray, offsets ndarray): per-row
-            # slices without to_pylist boxing
-            arr = tbl[name].chunk(0) if tbl[name].num_chunks else None
-            if arr is None:
-                return np.empty(0, dtype), np.zeros(1, np.int64)
-            return (
-                arr.values.to_numpy(zero_copy_only=False).astype(
-                    dtype, copy=False
-                ),
-                arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64),
-            )
-
-        out: dict[str, list] = {t: [[], [], []] for t in terms}
-        id_vals, id_off = flat("doc_ids", np.int64)
-        tf_vals, tf_off = flat("tfs", np.float64)
-        dl_vals, dl_off = flat("doc_lens", np.float64)
-        for r, t in enumerate(term_col):
-            out[t][0].append(id_vals[id_off[r] : id_off[r + 1]])
-            out[t][1].append(tf_vals[tf_off[r] : tf_off[r + 1]])
-            out[t][2].append(dl_vals[dl_off[r] : dl_off[r + 1]])
-
-        def cat(parts, dtype):
-            return (
-                np.concatenate(parts).astype(dtype, copy=False)
-                if parts
-                else np.empty(0, dtype)
-            )
-
-        return {
-            t: (
-                cat(v[0], np.int64),
-                cat(v[1], np.float64),
-                cat(v[2], np.float64),
-            )
-            for t, v in out.items()
-        }
+        bm_col = "block_max_bm25" if scorer == "bm25" else "block_max_tfidf"
+        out = {}
+        for t in terms:
+            post = self._bucket("postings", t)
+            lo, hi = post.rows(t)
+            span = slice(post.offsets[lo], post.offsets[hi])
+            cols = tuple(post.values[c][span] for c in ("doc_ids", "tfs", "doc_lens"))
+            if block_thresh:
+                keep = post.cols[bm_col][lo:hi] >= block_thresh[t]
+                if not keep.all():
+                    mask = np.repeat(keep, np.diff(post.offsets[lo : hi + 1]))
+                    cols = tuple(c[mask] for c in cols)
+            out[t] = cols
+        return out
 
     def _local_topk(
         self, terms, stats, scorer: str, mode: str, algo: str, k: int
@@ -817,9 +909,11 @@ class IndexShard:
             if ids.size == 0:
                 continue
             pos = np.searchsorted(uniq, ids)
+            tf = tf.astype(np.float64)
             if scorer == "bm25":
                 partial = bm25_partial_py(
-                    tf, dl, self.stats["avgdl"], self.config.k1, self.config.b
+                    tf, dl.astype(np.float64), self.stats["avgdl"],
+                    self.config.k1, self.config.b,
                 )
             else:
                 partial = tfidf_partial_py(tf, self.log10)
@@ -1009,17 +1103,20 @@ class IndexShard:
     # phrase coverage uses a one-hot bit_or up to this many terms (the
     # mask must fit a signed long); longer phrases use count_distinct
     PHRASE_BITMASK_MAX = 62
-    # block_summary tables whose ESTIMATED driver-RAM footprint stays
-    # under this are loaded whole on first probe (the reference's
-    # RAM-resident dictionary, Query.java:62-72): per-query theta then
-    # costs zero reads. Bigger vocabularies keep the bucket-pruned
-    # per-term probe. The estimate is uncompressed-parquet bytes (from
-    # footers) x PYLIST_BYTES_PER_ARROW_BYTE, because the cache holds
-    # to_pylist() dicts: measured on a 20k-term summary shaped like the
-    # real one (4 x 100-double top arrays per row), sys.getsizeof-walked
-    # dicts run ~4.2x the Arrow buffer size (each 8-byte double becomes
-    # a ~32-byte boxed float + list slot); 8 is the safety round-up.
-    BLOCK_SUMMARY_RAM_BYTES = 256 * 1024 * 1024
+    # bound on the index data an engine keeps decoded on the driver,
+    # summed over its shards (ResidentIndex): the lexicon and postings
+    # buckets and doctable files of the driver-local route, plus each
+    # block_summary table loaded whole on first probe (the reference's
+    # RAM-resident dictionary, Query.java:62-72; per-query theta then
+    # costs zero reads). A block_summary that does not fit keeps the
+    # bucket-pruned per-term probe. Its footprint is estimated as
+    # uncompressed-parquet bytes (from footers) x
+    # PYLIST_BYTES_PER_ARROW_BYTE, because that cache holds to_pylist()
+    # dicts: measured on a 20k-term summary shaped like the real one
+    # (4 x 100-double top arrays per row), sys.getsizeof-walked dicts
+    # run ~4.2x the Arrow buffer size (each 8-byte double becomes a
+    # ~32-byte boxed float + list slot); 8 is the safety round-up.
+    DRIVER_INDEX_RAM_BYTES = 256 * 1024 * 1024
     PYLIST_BYTES_PER_ARROW_BYTE = 8
 
     def _maxscore(self, terms, stats, scorer: str, k: int) -> DataFrame:
@@ -1423,15 +1520,19 @@ class SearchEngine:
     With one shard the merge passes the shard's result through."""
 
     # auto-engage the driver-local path when the query terms' total df
-    # is at most this many postings: ~16 B/posting decoded (int64 id +
-    # doubles) keeps the transient driver footprint tens of MB. The
+    # is at most this many postings. The postings themselves are slices
+    # of resident buckets (16 B/posting: int64 id + two int32), bounded
+    # separately by IndexShard.DRIVER_INDEX_RAM_BYTES; this gate bounds
+    # what one query adds on top (float64 tf/doc_len casts, partials,
+    # the doc_id union and its scores: ~40 B/posting, tens of MB). The
     # reference answers every interactive query from RAM (Query.java:
     # 62-72; Documentation.pdf Table 3's 16-72 ms are RAM-probe
     # numbers); this is the same trade with an explicit gate — at
     # web scale a stopword-laden query overflows the gate and falls
     # back to the distributed plan, which is the only one that can
     # answer it anyway. Phrase queries gate their total cf (one
-    # position int per term occurrence) under the same bound.
+    # position int per term occurrence) under the same bound; their
+    # positions are read per query, not kept.
     LOCAL_EXEC_MAX_POSTINGS = 2_000_000
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -1451,8 +1552,10 @@ class SearchEngine:
             global_stats = m["stats"]
         else:
             dirs, global_stats = [self.index_dir], None
+        self.resident = ResidentIndex(IndexShard.DRIVER_INDEX_RAM_BYTES)
         self.shards = [
-            IndexShard(self.spark, d, self._log10, global_stats) for d in dirs
+            IndexShard(self.spark, d, self._log10, self.resident, global_stats)
+            for d in dirs
         ]
         self.config = self.shards[0].config
         self.stats = self.shards[0].stats
@@ -1465,11 +1568,11 @@ class SearchEngine:
         return reduce(DataFrame.unionByName, [s.doctable for s in self.shards])
 
     def refresh(self) -> None:
-        """Re-open the index: drop the per-term memo caches and re-read
-        the index frames. Call after the index directory is updated IN
-        PLACE (e.g. streaming compaction into the same dir) — without
-        this, negative lexicon lookups memoized before the update would
-        keep treating newly indexed terms as absent."""
+        """Re-open the index: drop the resident index data and memo
+        caches and re-read the index frames. Call after the index
+        directory is updated IN PLACE (e.g. streaming compaction into
+        the same dir) — without this, lexicon buckets decoded before the
+        update would keep treating newly indexed terms as absent."""
         for shard in self.shards:
             shard._retire_phrase_cache(None)
         self._open()
@@ -1510,8 +1613,8 @@ class SearchEngine:
         """(collection-wide stats of the known terms, each shard's
         lexicon rows). One shard's rows are its lexicon's own, stored
         idf included; over N shards df and cf are exact integer sums
-        and idf is recomputed from the summed df. Driver-side pyarrow
-        lexicon probes only — no Spark job."""
+        and idf is recomputed from the summed df. Probes of the
+        shards' resident lexicon buckets — no Spark job."""
         per_shard = [s._term_stats(terms) for s in self.shards]
         if len(per_shard) == 1:
             return per_shard[0], per_shard
@@ -1572,11 +1675,12 @@ class SearchEngine:
 
     def add_docno(self, result: DataFrame) -> DataFrame:
         """``result`` (rank, doc_id, score, ...) with each row's docno
-        after its doc_id. A driver-held result takes docno from a
-        pyarrow probe of the shards' doctables (doc_id in its k ids)
-        and stays driver-held; a Spark result joins the doctable,
-        broadcasting the k-row result. A row whose doc_id the doctable
-        lacks drops out on both routes, as in an inner join."""
+        after its doc_id. A driver-held result takes docno from the
+        shards' doctable files, decoded and kept in the resident index
+        (IndexShard._docnos), and stays driver-held; a Spark result
+        joins the doctable, broadcasting the k-row result. A row whose
+        doc_id the doctable lacks drops out on both routes, as in an
+        inner join."""
         if not isinstance(result, LocalResult):
             rest = [c for c in result.columns if c not in ("rank", "doc_id")]
             return self.doctable.select("doc_id", "docno").join(
@@ -1586,15 +1690,10 @@ class SearchEngine:
         pdf = result._pdf
         if pdf is None or len(pdf) == 0:
             return LocalResult(self.spark, ddl)
-        import pyarrow.dataset as ds
-
-        ids = pdf["doc_id"].tolist()
+        ids = pdf["doc_id"].to_numpy()
         docno: dict[int, str] = {}
         for shard in self.shards:
-            tbl = shard._dataset("doctable").to_table(
-                filter=ds.field("doc_id").isin(ids), columns=["doc_id", "docno"]
-            )
-            docno.update(zip(tbl["doc_id"].to_pylist(), tbl["docno"].to_pylist()))
+            docno.update(shard._docnos(ids))
         pdf = pdf[pdf["doc_id"].isin(list(docno))]
         return LocalResult(self.spark, ddl, pdf.assign(docno=pdf["doc_id"].map(docno)))
 
@@ -1658,12 +1757,17 @@ class SearchEngine:
         bit-identical either way (same formulas, same summation order,
         same tie-break).
 
+        The lexicon probe of every route, and the postings the
+        driver-local route scores, come from index buckets decoded once
+        and kept on the driver (``resident``, see IndexShard): a query
+        whose buckets are resident reads no Parquet.
+
         The driver-local route, and every empty result, returns a
         :class:`LocalResult`: a DataFrame whose collect()/toPandas()/
         count() answer from the driver-held rows with no JVM round
         trip, and which builds a Spark plan only when a caller needs
         one (a join, select, schema, ...). ``with_docno`` on that route
-        takes docno from a driver-side doctable probe (add_docno); the
+        takes docno from the resident doctable files (add_docno); the
         distributed route joins the doctable.
 
         Over N > 1 shards ``algo='maxscore'`` runs DAAT (identical

@@ -1,4 +1,6 @@
+import os
 import shutil
+import struct
 import uuid
 from contextlib import contextmanager
 
@@ -65,3 +67,66 @@ def spark_jobs(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     return count
+
+
+# the local-route query shapes every resident-index test runs: each
+# scorer under DAAT, MaxScore and conjunctive
+ROUTES = [
+    dict(scorer=scorer, mode=mode, algo=algo)
+    for scorer in ("bm25", "tfidf")
+    for mode, algo in (
+        ("disjunctive", "daat"),
+        ("disjunctive", "maxscore"),
+        ("conjunctive", "daat"),
+    )
+]
+
+
+def exact_rows(df):
+    """A result's rows in rank order, each (rank, doc_id, docno, score
+    bits)."""
+    return [
+        (r["rank"], r["doc_id"], r["docno"], struct.pack("<d", r["score"]))
+        for r in sorted(df.collect(), key=lambda r: r["rank"])
+    ]
+
+
+def assert_local_equals_distributed_cold_and_warm(engine, queries):
+    """Every query of every ROUTES shape, with docno: the local route
+    with an empty resident index (cold, right after refresh()) and with
+    its buckets resident (warm) gives the distributed rows bit for
+    bit."""
+    for kw in ROUTES:
+        for q in queries:
+            want = exact_rows(engine.search(q, with_docno=True, local=False, **kw))
+            engine.refresh()
+            cold = exact_rows(engine.search(q, with_docno=True, local=True, **kw))
+            warm = exact_rows(engine.search(q, with_docno=True, local=True, **kw))
+            assert cold == want, (q, kw, "cold")
+            assert warm == want, (q, kw, "warm")
+
+
+def assert_warm_queries_read_no_parquet(
+    spark, index_dir, tmp_path, queries, spark_jobs, monkeypatch
+):
+    """Open a copy of ``index_dir``, run ``queries`` on every ROUTES
+    shape with docno once, then with IndexShard._dataset raising and
+    the copy moved away: the repeated queries give the same rows from
+    the resident index, read no file and run 0 Spark jobs."""
+    from searchengine_spark.query.engine import IndexShard, SearchEngine
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(index_dir, copy)
+    engine = SearchEngine(spark, copy)
+    calls = [dict(query=q, with_docno=True, **kw) for kw in ROUTES for q in queries]
+    want = [exact_rows(engine.search(**kw)) for kw in calls]
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("a warm query read Parquet")
+
+    monkeypatch.setattr(IndexShard, "_dataset", no_read)
+    os.rename(copy, copy + ".moved")
+    with spark_jobs() as jobs:
+        got = [exact_rows(engine.search(**kw)) for kw in calls]
+    assert jobs == [0]
+    assert got == want

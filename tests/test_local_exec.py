@@ -6,15 +6,24 @@ DataFrame answered from the driver-held rows, with a Spark plan built
 only for callers that need one."""
 
 import argparse
+import glob
 import io
+import os
+import shutil
 import struct
 
 import pytest
 
-from searchengine_spark.index.builder import build_index
-from searchengine_spark.query.engine import LocalResult, SearchEngine
+from searchengine_spark.index.builder import build_index, term_bucket_py
+from searchengine_spark.query.engine import IndexShard, LocalResult, SearchEngine
 
-from .conftest import TEST_CONFIG
+from .conftest import (
+    ROUTES,
+    TEST_CONFIG,
+    assert_local_equals_distributed_cold_and_warm,
+    assert_warm_queries_read_no_parquet,
+    exact_rows,
+)
 
 QUERIES = [
     "spark table join fast",
@@ -238,3 +247,92 @@ def test_cli_query_and_repl_launch_no_spark_job(spark, index_dir, spark_jobs, ca
     assert f"   1  {top['score']:>12.6f}  {top['doc_id']:>10}  {top['docno']}" in (
         out.getvalue()
     )
+
+
+# ---------- resident index: decoded buckets kept on the driver ----------
+
+
+def test_resident_local_bit_identical_cold_and_warm(engine):
+    assert_local_equals_distributed_cold_and_warm(engine, QUERIES)
+
+
+def test_warm_query_reads_no_parquet_and_runs_no_job(
+    spark, index_dir, tmp_path, spark_jobs, monkeypatch
+):
+    assert_warm_queries_read_no_parquet(
+        spark, index_dir, tmp_path, QUERIES[:4], spark_jobs, monkeypatch
+    )
+
+
+def test_resident_bucket_columns(engine):
+    """A resident postings bucket: sorted by (term, block_id), on-disk
+    dtypes, read-only, a term's postings one slice of the flat arrays."""
+    import numpy as np
+
+    shard = engine.shards[0]
+    post = shard._bucket("postings", "spark")
+    order = np.lexsort((post.cols["block_id"], post.terms))
+    assert (order == np.arange(order.size)).all()
+    assert post.values["doc_ids"].dtype == np.int64
+    assert post.values["tfs"].dtype == post.values["doc_lens"].dtype == np.int32
+    arrays = [post.terms, post.offsets, *post.cols.values(), *post.values.values()]
+    assert not any(a.flags.writeable for a in arrays)
+    ids, tfs, _ = shard._local_postings(["spark"])["spark"]
+    assert ids.size == shard._term_stats(["spark"])["spark"]["df"]
+    assert (np.diff(ids) > 0).all()  # blocks in block_id order
+    assert np.shares_memory(ids, post.values["doc_ids"])
+
+
+def test_small_budget_keeps_results_and_bound(spark, index_dir, monkeypatch):
+    """With the budget below the largest postings bucket a query needs:
+    the same rows as the distributed route, resident bytes within the
+    budget after every query, and the over-budget bucket answered but
+    not kept."""
+    ref = SearchEngine(spark, index_dir)
+    terms = ref.tokenize_query(QUERIES[0])
+    ref.search(QUERIES[0]).collect()
+    n = ref.config.n_term_buckets
+    keys = {t: (ref.shards[0].index_dir, "postings", term_bucket_py(t, n)) for t in terms}
+    size = {t: ref.resident._lru[key][1] for t, key in keys.items()}
+    big = max(size, key=size.get)
+    budget = size[big] - 1
+    monkeypatch.setattr(IndexShard, "DRIVER_INDEX_RAM_BYTES", budget)
+    engine = SearchEngine(spark, index_dir)
+    assert engine.resident.budget == budget
+    for kw in ROUTES:
+        for q in QUERIES:
+            want = exact_rows(ref.search(q, with_docno=True, local=False, **kw))
+            got = exact_rows(engine.search(q, with_docno=True, local=True, **kw))
+            assert got == want, (q, kw)
+            assert engine.resident.resident + engine.resident.reserved <= budget
+            assert keys[big] not in engine.resident
+
+
+def test_resident_rows_ignore_file_row_order(spark, engine, index_dir, tmp_path):
+    """The build's partitioned write does not keep its term sort, so
+    the resident buckets sort on load: on a copy whose lexicon and
+    postings files are rewritten with their rows shuffled, the local
+    route gives the original distributed rows."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    copy = str(tmp_path / "shuffled")
+    shutil.copytree(index_dir, copy)
+    rng = np.random.default_rng(7)
+    moved = 0
+    for table in ("lexicon", "postings"):
+        for f in glob.glob(os.path.join(copy, table, "*", "*.parquet")):
+            tbl = pq.ParquetFile(f).read()
+            perm = rng.permutation(tbl.num_rows)
+            moved += bool((perm != np.arange(tbl.num_rows)).any())
+            pq.write_table(tbl.take(perm), f, compression="zstd")
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+    assert moved > 0
+    shuffled = SearchEngine(spark, copy)
+    for kw in ROUTES:
+        for q in QUERIES:
+            want = exact_rows(engine.search(q, with_docno=True, local=False, **kw))
+            got = exact_rows(shuffled.search(q, with_docno=True, local=True, **kw))
+            assert got == want, (q, kw)

@@ -16,7 +16,12 @@ from searchengine_spark.index.sharded import (
     build_sharded_index,
 )
 from searchengine_spark.query.engine import LocalResult, SearchEngine
-from tests.conftest import TEST_CONFIG
+from tests.conftest import (
+    TEST_CONFIG,
+    assert_local_equals_distributed_cold_and_warm,
+    assert_warm_queries_read_no_parquet,
+    exact_rows,
+)
 
 QUERIES = [
     "spark table join fast",
@@ -361,3 +366,35 @@ def test_cli_phrase_takes_docno_on_the_driver(spark, positions_pair, spark_jobs,
             f"{r['rank']:>4}  {r['score']:>12.6f}  {r['doc_id']:>10}  {r['docno']}"
             for r in sorted(rows, key=lambda r: r["rank"])
         ]
+
+
+# ---------- resident index over N shards ----------
+
+
+def test_sharded_resident_bit_identical_cold_and_warm(sharded):
+    assert_local_equals_distributed_cold_and_warm(sharded, QUERIES)
+
+
+def test_sharded_warm_query_reads_no_parquet_and_runs_no_job(
+    spark, sharded, tmp_path, spark_jobs, monkeypatch
+):
+    assert_warm_queries_read_no_parquet(
+        spark, sharded.index_dir, tmp_path, QUERIES[:4], spark_jobs, monkeypatch
+    )
+
+
+def test_driver_docno_equals_broadcast_join(single, sharded):
+    """add_docno from the resident doctable files gives the rows of the
+    doctable broadcast join, on one shard and on N."""
+    for engine in (single, sharded):
+        for q in QUERIES:
+            for k in (10, 100):
+                local = engine.search(q, k=k, local=True)
+                dist = engine.search(q, k=k, local=False)
+                assert isinstance(engine.add_docno(local), LocalResult)
+                assert exact_rows(engine.add_docno(local)) == exact_rows(
+                    engine.add_docno(dist)
+                ), (q, k)
+    # one LRU per engine, summed over its shards
+    keys = {key[0] for key in sharded.resident._lru}
+    assert keys == {s.index_dir for s in sharded.shards}
